@@ -16,7 +16,6 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 SF_DEFAULT = "/root/testdata/sf0.001"
@@ -212,162 +211,96 @@ def q_cooc_upsert_sum(spark, sf_dir):
     )
 
 
-def q_x2_levenshtein_pairs(spark, sf_dir):
-    """X2 NormalizedLevenshtein as JVM column math over a blocked self-join
-    (Configuration.java:213 metric; upper-triangle like CompareJob.java:28)."""
-    from graph_embeddings_spark.functions.similarity import normalized_levenshtein_col
-
-    p = _t(spark, sf_dir, "part").filter(F.col("p_partkey") < 200).select("p_partkey", "p_name")
+def _part_name_pairs(spark, sf_dir, max_key: int):
+    """(a, b, na, nb) upper-triangle part-name pairs (CompareJob.java:28)."""
+    p = _t(spark, sf_dir, "part").filter(F.col("p_partkey") < max_key).select("p_partkey", "p_name")
     a = p.select(F.col("p_partkey").alias("a"), F.col("p_name").alias("na"))
     b = p.select(F.col("p_partkey").alias("b"), F.col("p_name").alias("nb"))
-    sim = normalized_levenshtein_col(F.col("na"), F.col("nb"))
+    return a.crossJoin(b).filter(F.col("a") < F.col("b"))
+
+
+def _scored_name_pairs(spark, sf_dir, method: str, max_key: int, threshold: float):
+    """Part-name pairs scored by the J1 rescore the pipeline ships
+    (functions.similarity.similarity_col), rounded to 6 places and kept at
+    sim >= threshold."""
+    from graph_embeddings_spark.functions.similarity import similarity_col
+
+    sim = similarity_col(method, F.col("na"), F.col("nb"))
     return (
-        a.crossJoin(b)
-        .filter(F.col("a") < F.col("b"))
+        _part_name_pairs(spark, sf_dir, max_key)
         .select("a", "b", F.round(sim, 6).alias("sim"))
-        .filter(F.col("sim") >= 0.7)
+        .filter(F.col("sim") >= threshold)
     )
+
+
+def q_x2_levenshtein_pairs(spark, sf_dir):
+    """X2 NormalizedLevenshtein (Configuration.java:213 metric) over a
+    blocked self-join — codegen column math."""
+    return _scored_name_pairs(spark, sf_dir, "levenshtein", 200, 0.7)
 
 
 def q_x1_jarowinkler_pairs(spark, sf_dir):
     """X1 JaroWinkler (Configuration.java:213 dispatch) over blocked part-name
-    pairs — Arrow-batched pandas UDF running the from-scratch scalar
-    (functions/similarity.py jaro_winkler_py), the same sanctioned path the
-    canonicalization rescore uses. Oracle: DuckDB jaro_winkler_similarity
-    (verified bit-identical on this column)."""
-    from pyspark.sql.types import DoubleType
+    pairs — the Arrow-batched from-scratch scalar (jaro_winkler_py). Oracle:
+    DuckDB jaro_winkler_similarity (verified bit-identical on this column)."""
+    from graph_embeddings_spark.functions.similarity import similarity_col
 
-    from graph_embeddings_spark.functions.similarity import jaro_winkler_py
-
-    @F.pandas_udf(DoubleType())
-    def jw(a: pd.Series, b: pd.Series) -> pd.Series:
-        return pd.Series([jaro_winkler_py(x, y) for x, y in zip(a, b)], dtype="float64")
-
-    p = _t(spark, sf_dir, "part").filter(F.col("p_partkey") < 200).select("p_partkey", "p_name")
-    a = p.select(F.col("p_partkey").alias("a"), F.col("p_name").alias("na"))
-    b = p.select(F.col("p_partkey").alias("b"), F.col("p_name").alias("nb"))
     return (
-        a.crossJoin(b)
-        .filter(F.col("a") < F.col("b"))
-        .withColumn("_sim", jw(F.col("na"), F.col("nb")))
+        _part_name_pairs(spark, sf_dir, 200)
+        .withColumn("_sim", similarity_col("jarowinkler", F.col("na"), F.col("nb")))
         .filter(F.col("_sim") >= 0.75)
         .select("a", "b", F.round("_sim", 6).alias("sim"))
     )
 
 
 def q_x3_token_jaccard_pairs(spark, sf_dir):
-    """X3 token jaccard as the JVM column form (TokenJaccard.java:24-35
-    semantics: trim, drop len<=1 + stopwords, distinct sets)."""
-    from graph_embeddings_spark.functions.similarity import token_jaccard_col
-
-    p = _t(spark, sf_dir, "part").filter(F.col("p_partkey") < 250).select("p_partkey", "p_name")
-    a = p.select(F.col("p_partkey").alias("a"), F.col("p_name").alias("na"))
-    b = p.select(F.col("p_partkey").alias("b"), F.col("p_name").alias("nb"))
-    sim = token_jaccard_col(F.col("na"), F.col("nb"))
-    return (
-        a.crossJoin(b)
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b", F.round(sim, 6).alias("sim"))
-        .filter(F.col("sim") >= 0.5)
-    )
+    """X3 token jaccard (TokenJaccard.java:24-35 semantics: trim, drop
+    len<=1 + stopwords, distinct sets)."""
+    return _scored_name_pairs(spark, sf_dir, "token_jaccard", 250, 0.5)
 
 
 def q_x7_ngram_jaccard_pairs(spark, sf_dir):
-    """X7 char-3-gram jaccard as the JVM column form (debatty ShingleBased
-    profile: whitespace collapsed, no lowercase/trim)."""
-    from graph_embeddings_spark.functions.similarity import ngram_jaccard_col
-
-    p = _t(spark, sf_dir, "part").filter(F.col("p_partkey") < 250).select("p_partkey", "p_name")
-    a = p.select(F.col("p_partkey").alias("a"), F.col("p_name").alias("na"))
-    b = p.select(F.col("p_partkey").alias("b"), F.col("p_name").alias("nb"))
-    sim = ngram_jaccard_col(F.col("na"), F.col("nb"), 3)
-    return (
-        a.crossJoin(b)
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b", F.round(sim, 6).alias("sim"))
-        .filter(F.col("sim") >= 0.5)
-    )
+    """X7 char-3-gram jaccard (debatty ShingleBased profile: whitespace
+    collapsed, no lowercase/trim)."""
+    return _scored_name_pairs(spark, sf_dir, "ngram_jaccard", 250, 0.5)
 
 
 def q_x4_token_cosine_pairs(spark, sf_dir):
-    """X4 token cosine over token-COUNT profiles as the JVM column form
-    (TokenCosine.java:10-45; Configuration.java:201-227 dispatch)."""
-    from graph_embeddings_spark.functions.similarity import token_cosine_col
-
-    p = _t(spark, sf_dir, "part").filter(F.col("p_partkey") < 250).select("p_partkey", "p_name")
-    a = p.select(F.col("p_partkey").alias("a"), F.col("p_name").alias("na"))
-    b = p.select(F.col("p_partkey").alias("b"), F.col("p_name").alias("nb"))
-    sim = token_cosine_col(F.col("na"), F.col("nb"))
-    return (
-        a.crossJoin(b)
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b", F.round(sim, 6).alias("sim"))
-        .filter(F.col("sim") >= 0.5)
-    )
+    """X4 token cosine over token-COUNT profiles (TokenCosine.java:10-45;
+    Configuration.java:201-227 dispatch)."""
+    return _scored_name_pairs(spark, sf_dir, "token_cosine", 250, 0.5)
 
 
 def q_x5_x6_precomputed(spark, sf_dir):
     """X5 PreComputedTokenJaccard (PreComputedTokenJaccard.java:12-52) + X6
     PreComputedTokenCosine in one harness row (the driver's correctness file
-    caps at 50 entries): the Arrow-batched SCALARS (token_jaccard_py /
-    token_cosine_py — the exact profile math the canonicalization rescore
-    ships), certified against the same DuckDB oracle shapes as X3/X4,
-    labeled per metric."""
-    from pyspark.sql.types import DoubleType
-
-    from graph_embeddings_spark.functions.similarity import token_cosine_py, token_jaccard_py
-
-    @F.pandas_udf(DoubleType())
-    def tj(a: pd.Series, b: pd.Series) -> pd.Series:
-        return pd.Series([token_jaccard_py(x, y) for x, y in zip(a, b)], dtype="float64")
-
-    @F.pandas_udf(DoubleType())
-    def tc(a: pd.Series, b: pd.Series) -> pd.Series:
-        return pd.Series([token_cosine_py(x, y) for x, y in zip(a, b)], dtype="float64")
-
-    p = _t(spark, sf_dir, "part").filter(F.col("p_partkey") < 200).select("p_partkey", "p_name")
-    a = p.select(F.col("p_partkey").alias("a"), F.col("p_name").alias("na"))
-    b = p.select(F.col("p_partkey").alias("b"), F.col("p_name").alias("nb"))
-    pairs = a.crossJoin(b).filter(F.col("a") < F.col("b"))
+    caps at 50 entries), certified against the same DuckDB oracle shapes as
+    X3/X4, labeled per metric."""
     out = None
-    for metric, fn in (("token_jaccard", tj), ("token_cosine", tc)):
-        part = pairs.select(
-            F.lit(metric).alias("metric"),
-            "a",
-            "b",
-            F.round(fn(F.col("na"), F.col("nb")), 6).alias("sim"),
-        ).filter(F.col("sim") >= 0.5)
+    for metric in ("token_jaccard", "token_cosine"):
+        part = _scored_name_pairs(spark, sf_dir, metric, 200, 0.5).select(
+            F.lit(metric).alias("metric"), "a", "b", "sim"
+        )
         out = part if out is None else out.unionByName(part)
     return out
 
 
 def q_x8_ngram_cosine_pairs(spark, sf_dir):
-    """X8 char-3-gram cosine over gram-count profiles as the JVM column form
+    """X8 char-3-gram cosine over gram-count profiles
     (PreComputedNgramCosine.java:10-63)."""
-    from graph_embeddings_spark.functions.similarity import ngram_cosine_col
-
-    p = _t(spark, sf_dir, "part").filter(F.col("p_partkey") < 250).select("p_partkey", "p_name")
-    a = p.select(F.col("p_partkey").alias("a"), F.col("p_name").alias("na"))
-    b = p.select(F.col("p_partkey").alias("b"), F.col("p_name").alias("nb"))
-    sim = ngram_cosine_col(F.col("na"), F.col("nb"), 3)
-    return (
-        a.crossJoin(b)
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b", F.round(sim, 6).alias("sim"))
-        .filter(F.col("sim") >= 0.5)
-    )
+    return _scored_name_pairs(spark, sf_dir, "ngram_cosine", 250, 0.5)
 
 
 def q_x9_numeric_similarity(spark, sf_dir):
     """X9 numeric proximity (||a-b|-d|+1)^(s-1) on order line quantities."""
-    from graph_embeddings_spark.functions.similarity import numeric_similarity_col
+    from graph_embeddings_spark.functions.similarity import similarity_col
 
     li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") < 100)
     a = li.select(F.col("l_orderkey").alias("k"), F.col("l_linenumber").alias("a"),
                   F.col("l_quantity").cast("int").cast("string").alias("qa"))
     b = li.select(F.col("l_orderkey").alias("k"), F.col("l_linenumber").alias("b"),
                   F.col("l_quantity").cast("int").cast("string").alias("qb"))
-    sim = numeric_similarity_col(F.col("qa"), F.col("qb"), smooth=0.5, distance=0.0)
+    sim = similarity_col("numeric", F.col("qa"), F.col("qb"), smooth=0.5, distance=0.0)
     return (
         a.join(b, "k")
         .filter(F.col("a") < F.col("b"))
@@ -377,17 +310,17 @@ def q_x9_numeric_similarity(spark, sf_dir):
 
 def q_x10_date_similarity(spark, sf_dir):
     """X10 date-days similarity with the BACKWARDS direction gate over order
-    dates — THROUGH the engine's date column form
-    (functions.similarity.date_similarity_col, Date.java:31-66), not an
-    inline re-derivation: the green row certifies the shipping path."""
-    from graph_embeddings_spark.functions.similarity import date_similarity_col
+    dates, passed as BASIC_ISO_DATE (yyyyMMdd) literal strings exactly as
+    the J1 rescore sees them (Date.java:31-66)."""
+    from graph_embeddings_spark.functions.similarity import similarity_col
 
     o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 300)
-    a = o.select(F.col("o_orderkey").alias("a"), F.col("o_orderdate").cast("date").alias("da"))
-    b = o.select(F.col("o_orderkey").alias("b"), F.col("o_orderdate").cast("date").alias("db"))
-    sim = date_similarity_col(
-        F.col("da"), F.col("db"), unit="days", smooth=0.5, distance=0.0,
-        time_direction="backwards",
+    iso = F.date_format(F.col("o_orderdate").cast("date"), "yyyyMMdd")
+    a = o.select(F.col("o_orderkey").alias("a"), iso.alias("da"))
+    b = o.select(F.col("o_orderkey").alias("b"), iso.alias("db"))
+    sim = similarity_col(
+        "date_days", F.col("da"), F.col("db"), smooth=0.5, distance=0.0,
+        pattern="iso", time="backwards",
     )
     return (
         a.crossJoin(b)

@@ -215,7 +215,6 @@ def run_glove_scale_section(spark, n_entries: int) -> dict:
             new_params, _obs = train_epoch(
                 cooc, params, dim=32, method="adagrad", cost="glove", max_x=5.0,
                 iteration=it, seed=42, n_shards=n_shards, batch=4096,
-                eager_cost=False,  # fused one-job epoch, the optimize() path
             )
             _force(new_params)
             trials.append(round(time.perf_counter() - t0, 3))
@@ -344,7 +343,7 @@ def run_pipeline_section(spark, n_pages: int) -> dict:
             t2 = time.perf_counter()
             new_params, _obs = train_epoch(
                 cooc, params, dim=32, method="adagrad", cost="glove", max_x=res.max_x,
-                iteration=it, seed=42, n_shards=pipeline_shards, batch=4096, eager_cost=False,
+                iteration=it, seed=42, n_shards=pipeline_shards, batch=4096,
             )
             _force(new_params)
             g_trials.append(time.perf_counter() - t2)

@@ -10,8 +10,8 @@ executors share no memory, so (per BASELINE.json north_star) each epoch:
      persisted) and each epoch re-draws only the deterministic WITHIN-
      shard order key `_ord` = xxhash64(j, i, seed*31+epoch) — order
      re-permutes per epoch exactly as upstream, while the epoch's biggest
-     relation never re-shuffles. (Ad-hoc unsharded input still works:
-     train_epoch then also re-draws block membership per epoch.)
+     relation never re-shuffles. train_epoch takes only this presharded
+     relation.
   2. param co-partition — each param HALF ships directly to its grid
      row/column of shards (computable from the node hash alone, no
      touched-sides join): focus/f_bias/f-state to the G shards that can
@@ -43,7 +43,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from ..functions.partitioning import collision_free_labels
 from .kernel import half_state_size, init_params, init_state, train_shard
@@ -131,7 +131,7 @@ def _flat_f32(tbl, name: str, n: int) -> np.ndarray:
     materializing per-row numpy objects. The Arrow->pandas path this
     replaces created one small ndarray PER CELL (~110k objects per combine
     task), which made combine tasks 3.6x slower when 8 ran side-by-side
-    (allocator churn) — measured via tools/glove_stage_probe.py."""
+    (allocator churn)."""
     import pyarrow  # noqa: F401  (imported lazily on executors)
 
     col = tbl.column(name).combine_chunks()
@@ -157,31 +157,27 @@ def _f32_list(mat: np.ndarray, tail_empty: int = 0):
 def _combine_epoch(
     copies: DataFrame,
     params: DataFrame,
-    average_mode: str,
     hw: int,
     tail: int,
     n_shards: int = 8,
 ) -> DataFrame:
     """Shard copies + pre-epoch params -> new params, ONE Arrow stage.
 
-    Combine semantics (measured on the synthetic corpus, 12 epochs, dim
-    16, 4-16 shards):
-      hybrid (default): vectors & optimizer state accumulate their shard
-        deltas (new = old + Σ_s(θ_s − old) — the shared-memory-free
-        equivalent of the reference's hogwild sum, Optimizer.java:77-94),
-        while the biases take the MEAN of the shard copies. The lr-free
-        bias step (Adagrad.java:88-89) is a fixed-point iteration, not a
-        descent step — summing its deltas across k shards overshoots k×
-        (cost spikes 30× in epoch 2-3), while the mean of per-shard fixed
-        points sits at the global fixed point. MRR parity with the
-        single-shard run (0.89 vs 0.89); sum_delta got 0.22, mean 0.03.
-        Under side-split shipping the bias mean runs over the copies that
-        actually TRAINED that side (an untrained side's copy would equal
-        `old` exactly, so for the delta modes dropping it is algebraically
-        identical; for the bias mean it stops diluting the fixed-point
-        average toward the stale value — MRR gates re-verified).
-      sum_delta: delta accumulation for everything (kept for study).
-      mean: plain parameter averaging for everything (kept for comparison).
+    Hybrid combine: vectors & optimizer state accumulate their shard deltas
+    (new = old + Σ_s(θ_s − old) — the shared-memory-free equivalent of the
+    reference's hogwild sum, Optimizer.java:77-94), while the biases take
+    the MEAN of the shard copies. The lr-free bias step
+    (Adagrad.java:88-89) is a fixed-point iteration, not a descent step —
+    summing its deltas across k shards overshoots k× (cost spikes 30× in
+    epoch 2-3), while the mean of per-shard fixed points sits at the
+    global fixed point. Measured on the synthetic corpus (12 epochs, dim
+    16, 4-16 shards): MRR parity with the single-shard run (0.89 vs 0.89),
+    where delta-summing the biases too got 0.22 and plain parameter
+    averaging of everything 0.03. Under side-split shipping the bias mean
+    runs over the copies that actually TRAINED that side (an untrained
+    side's copy would equal `old` exactly, so dropping it leaves the delta
+    sum unchanged and stops diluting the fixed-point average toward the
+    stale value — MRR gates re-verified).
 
     Physical shape (replaces r2's collect_list + interpreted aggregate/
     zip_with combine, which was 65 of an 84 s epoch at 640k entries — the
@@ -189,9 +185,9 @@ def _combine_epoch(
     kernels): copies ∪ old params are repartitioned ONCE on node_id, then a
     per-partition numpy segment-sum (np.add.reduceat over the id-sorted
     block, old row first per group) computes the combine, the old-params
-    join, AND the untouched carry-through in the same pass — for every
-    mode the formula new = (sum − old) · w + (1 − n·w′) · old degrades to
-    `old` at n = 0, so untouched nodes need no separate branch.
+    join, AND the untouched carry-through in the same pass — the formula
+    new = (sum − old) + (1 − n) · old degrades to `old` at n = 0, so
+    untouched nodes need no separate branch.
 
     Arrow-native (mapInArrow): the list<float32> columns flatten zero-copy
     into contiguous matrices and the output is rebuilt as one ListArray —
@@ -240,8 +236,8 @@ def _combine_epoch(
         touched = n > 0
 
         # ONE segment-sum over the packed [vec | state_half | bias] matrix,
-        # then slice-wise post-ops: delta-sum for the array body, per-mode
-        # rule for the bias column. Reorder in float32 (half the temp
+        # then delta-sum for the array body and the trained-copy mean for
+        # the bias column. Reorder in float32 (half the temp
         # bytes), accumulate in float64 via reduceat's dtype — bit-identical
         # to casting up front, since each element upcasts exactly.
         mat = _flat_f32(tbl, "blob", nrows)[order]
@@ -249,15 +245,8 @@ def _combine_epoch(
         total = np.add.reduceat(mat, starts, axis=0, dtype=np.float64)
         old = mat[starts].astype(np.float64)
         csum = total - old
-        if average_mode == "mean":
-            out = old.copy()
-            out[touched] = csum[touched] / n[touched, None]
-        else:  # hybrid / sum_delta: delta accumulation for the array body
-            out = csum + (1.0 - n)[:, None] * old
-            if average_mode == "hybrid":  # bias column: mean of trained copies
-                b = old[:, -1].copy()
-                b[touched] = csum[touched, -1] / n[touched]
-                out[:, -1] = b
+        out = csum + (1.0 - n)[:, None] * old
+        out[touched, -1] = csum[touched, -1] / n[touched]
         bias = out[:, -1]
         body = out[:, :-1].astype(np.float32)
 
@@ -394,6 +383,44 @@ def _make_train_fn(dim: int, method: str, cost: str, max_x: float, iteration: in
     return train_fn
 
 
+def _grid_blocks(seed: int, n_shards: int):
+    """The run's grid sharding, defined once for preshard_cooc and the
+    param shipping in train_epoch -> (grid, row_h, col_h, label).
+
+    GRID sharding (block-partitioned SGD): nodes hash into G row-blocks
+    (focus side, row_h) x G column-blocks (context side, col_h), G =
+    round(sqrt(n_shards)), and entry (i, j) trains in shard
+    label(row_h(i)·G + col_h(j)). A node's params then ship to at most 2G
+    of the G² shards (its grid row + column) instead of potentially all of
+    them: at 640k synthetic entries the hub-skewed corpus shipped 717k
+    param-copy rows for a 50k vocab (14x duplication) under flat hashing —
+    the copy traffic, not the update math, was the epoch's scaling
+    ceiling.
+
+    label remaps a block index through driver-mined collision-free labels
+    (functions/partitioning.py): repartition(n, key) routes by
+    pmod(murmur3(key), n), and n small ids in n buckets is a balls-in-bins
+    draw — measured 2-3 shards on one task (5.3 s critical path vs 1.5 s
+    balanced) with several empty tasks. The label map makes
+    shard->partition a bijection; grouping content (and therefore kernel
+    output) is unchanged."""
+    grid = max(1, round(n_shards ** 0.5))
+    # labels are mined for the LONG hash — a bare F.lit(int) would make an
+    # IntegerType array and route by hashInt, voiding the bijection
+    lab_arr = F.array(*[F.lit(int(v)).cast("long") for v in collision_free_labels(grid * grid)])
+
+    def row_h(c):
+        return F.pmod(F.xxhash64(c, F.lit(seed)), F.lit(grid))
+
+    def col_h(c):
+        return F.pmod(F.xxhash64(c, F.lit(seed + 7919)), F.lit(grid))
+
+    def label(idx):
+        return F.element_at(lab_arr, idx.cast("int") + 1)
+
+    return grid, row_h, col_h, label
+
+
 def train_epoch(
     cooc: DataFrame,
     params: DataFrame,
@@ -406,94 +433,37 @@ def train_epoch(
     seed: int,
     n_shards: int,
     batch: int = 4096,
-    average_mode: str = "hybrid",
-    cache_handles: list | None = None,
-    eager_cost: bool = True,
-) -> tuple[DataFrame, float]:
-    """One epoch -> (new params DF, summed cost). Lazy until the cost agg.
-
-    cache_handles: the epoch's persisted cogroup output is appended here so
-    the caller can unpersist it once new_params is materialized (optimize
-    does after each epoch checkpoint) — otherwise cached shard outputs
-    accumulate across a long run. None = caller accepts the leak (single-
-    epoch uses; Spark's ContextCleaner reclaims on GC eventually).
-
-    eager_cost=False fuses the epoch into ONE job: instead of persisting
-    the cogroup output and running a separate cost-aggregation pass, a
-    CollectMetrics node (`Observation`) sums the per-shard cost rows
-    during the SAME materialization that produces the new params, and the
-    return value is (new_params, Observation) — the caller MUST
+) -> tuple[DataFrame, Observation]:
+    """One epoch over a `preshard_cooc` relation -> (new params DF,
+    Observation). Lazy, and fused into ONE job: a CollectMetrics node
+    (`Observation`) sums the per-shard cost rows during the same
+    materialization that produces the new params. The caller MUST
     materialize new_params exactly once (checkpoint / write / count;
     verified to fire for all of these incl. localCheckpoint) and then read
-    `obs.get[\"cost\"]`. This halves the epoch's job count and drops the
-    242k-row shard-output cache entirely (optimize and the bench use it;
-    the eager default keeps the simple call-and-get contract for tests
-    and one-shot callers)."""
-    # GRID sharding (block-partitioned SGD): nodes hash into G row-blocks
-    # (focus side) x G column-blocks (context side), shard = (bi, bj).
-    # A node's params then ship to at most 2G of the G^2 shards (its grid
-    # row + column) instead of potentially all of them: at 640k synthetic
-    # entries the hub-skewed corpus shipped 717k param-copy rows for a 50k
-    # vocab (14x duplication) under flat hashing — the copy traffic, not
-    # the update math, was the epoch's scaling ceiling (Arrow + shuffle +
-    # persist of copies dominated; the kernel fn itself is 0.3 s/task).
-    # SIDE-SPLIT shipping halves that traffic again: a shard in a node's
-    # grid ROW trains only its focus half, so only (focus, f_bias, f-state)
-    # ships there — and only that half ships back (the context half would
-    # return unchanged: for the delta combine that contribution is exactly
-    # zero, so dropping it is algebraically identical).
-    # The reference's T1 epoch shuffle permutes ENTRY ORDER on one machine
-    # (Permutation.java:21-23) — thread/shard assignment has no analog
-    # there. Two faithful shardings are therefore supported:
-    #   * ad-hoc cooc (no `shard` column): blocks re-drawn per epoch
-    #     (seed+iteration) AND order re-drawn via _ord — one cooc shuffle
-    #     per epoch;
-    #   * presharded cooc (`preshard_cooc`, persisted by the caller):
-    #     block membership fixed for the run, only the within-shard ORDER
-    #     re-draws per epoch (exactly the reference's contract). The
-    #     per-epoch plan then just projects a fresh _ord over the cache —
-    #     the epoch's biggest input relation never re-shuffles.
-    presharded = "shard" in cooc.columns
-    shard_seed = seed if presharded else seed + iteration
-    grid = max(1, round(n_shards ** 0.5))
-    n_shards = grid * grid
-    # grid-shard ids are remapped through driver-mined collision-free
-    # labels (functions/partitioning.py): repartition(n, key) routes by
-    # pmod(murmur3(key), n), and n small ids in n buckets is a
-    # balls-in-bins draw — measured 2-3 shards on one task (5.3 s critical
-    # path vs 1.5 s balanced) with several empty tasks. The label map
-    # makes shard->partition a bijection; grouping content (and therefore
-    # kernel output) is unchanged.
-    _labels = collision_free_labels(n_shards)
-    # labels are mined for the LONG hash — a bare F.lit(int) would make an
-    # IntegerType array and route by hashInt, voiding the bijection
-    _lab_arr = F.array(*[F.lit(int(v)).cast("long") for v in _labels])
+    `obs.get["cost"]`.
 
-    def _labeled(idx_col):
-        return F.element_at(_lab_arr, idx_col.cast("int") + 1)
-
-    _ord = F.xxhash64("j", "i", F.lit(seed * 31 + iteration)).alias("_ord")
-    if presharded:
-        # narrow projection over the persisted sharded relation: partition
-        # layout (HashPartitioning(shard, n_shards)) is preserved, so the
-        # cogroup below reads the cache with NO exchange on this side
-        sharded = cooc.select("i", "j", "x", "shard", _ord)
-    else:
-        shard_key = _labeled(
-            F.pmod(F.xxhash64("i", F.lit(shard_seed)), F.lit(grid)) * grid
-            + F.pmod(F.xxhash64("j", F.lit(shard_seed + 7919)), F.lit(grid))
+    seed and n_shards must be the ones the cooc was presharded with: the
+    params ship to the same grid blocks (a mismatch fails loudly in the
+    kernel)."""
+    if "shard" not in cooc.columns:
+        raise ValueError(
+            "train_epoch needs a presharded cooc (no `shard` column): pass it "
+            "through preshard_cooc(cooc, seed=seed, n_shards=n_shards) first"
         )
-        # one explicit clustering by shard: the per-side distincts below
-        # (hash(shard) satisfies ClusteredDistribution(shard, node_id)) and
-        # the cogroup's cooc side all reuse this exchange
-        sharded = cooc.select(
-            "i", "j", "x", shard_key.alias("shard"), _ord
-        ).repartition(n_shards, "shard")
+    grid, row_h, col_h, label = _grid_blocks(seed, n_shards)
+    n_shards = grid * grid
+    # The reference's T1 epoch shuffle permutes ENTRY ORDER on one machine
+    # (Permutation.java:21-23): block membership stays fixed for the run
+    # and only the within-shard order key re-draws per epoch. A narrow
+    # projection over the persisted sharded relation keeps its partition
+    # layout (HashPartitioning(shard, n_shards)), so the cogroup below
+    # reads the cache with NO exchange on this side.
+    _ord = F.xxhash64("j", "i", F.lit(seed * 31 + iteration)).alias("_ord")
+    sharded = cooc.select("i", "j", "x", "shard", _ord)
     hw, tail = _side_layout(method, dim)
-    f_half, c_half = _state_half_slices(hw, tail)
-    # DIRECT param shipping: under the grid key a node's focus half can
-    # only be needed in the G shards of its grid ROW (shard = rowhash(i)·G
-    # + colhash(j)) and its context half in the G shards of its grid
+    # SIDE-SPLIT DIRECT param shipping: a shard in a node's grid ROW trains
+    # only its focus half, so only (focus, f_bias, f-state) ships to the G
+    # shards of that row, and the context half to the G shards of its grid
     # COLUMN — both computable from the node hash alone. Each side row
     # therefore explodes straight to its G candidate blocks: no
     # touched-sides distinct over the 2·|cooc| exploded endpoints and no
@@ -517,23 +487,17 @@ def train_epoch(
             c_blob.alias("blob"),
         )
     )
-    # MUST mirror the cooc-side block draw: shard_seed, not seed+iteration
-    # (under presharding the blocks are the run-fixed seed draw)
-    row_h = F.pmod(F.xxhash64("node_id", F.lit(shard_seed)), F.lit(grid))
-    col_h = F.pmod(F.xxhash64("node_id", F.lit(shard_seed + 7919)), F.lit(grid))
     shard_params = params_sides.withColumn(
         "_blk", F.explode(F.sequence(F.lit(0), F.lit(grid - 1)))
     ).select(
-        _labeled(
-            F.when(F.col("pside") == 0, row_h * grid + F.col("_blk"))
-            .otherwise(F.col("_blk") * grid + col_h)
+        label(
+            F.when(F.col("pside") == 0, row_h("node_id") * grid + F.col("_blk"))
+            .otherwise(F.col("_blk") * grid + col_h("node_id"))
         ).alias("gshard"),
         "node_id",
         F.col("pside").alias("side"),
         "blob",
     )
-    if average_mode not in ("hybrid", "sum_delta", "mean"):
-        raise ValueError(f"unknown average_mode {average_mode}")
     train_fn = _make_train_fn(dim, method, cost, max_x, iteration, batch)
     # explicit repartition on the params side as well: a bare groupBy leaves
     # that exchange AQE-owned, and AQE's byte-targeted coalescing (64 MB
@@ -547,26 +511,10 @@ def train_epoch(
         .cogroup(shard_params.repartition(n_shards, "gshard").groupBy("gshard"))
         .applyInArrow(train_fn, _OUT_SCHEMA)
     )
-
-    if not eager_cost:
-        from pyspark.sql import Observation
-
-        obs = Observation(f"epoch_cost_{iteration}")
-        out = raw.observe(obs, F.sum("cost").alias("cost"))
-        copies = out.filter(F.col("node_id") >= 0).select(
-            "node_id", "side", "blob"
-        )
-        return _combine_epoch(copies, params, average_mode, hw, tail, n_shards), obs
-
-    out = raw.persist()
-    if cache_handles is not None:
-        cache_handles.append(out)
-    total_cost = out.filter(F.col("node_id") < 0).agg(F.sum("cost")).collect()[0][0] or 0.0
-    copies = out.filter(F.col("node_id") >= 0).select(
-        "node_id", "side", "blob"
-    )
-    new_params = _combine_epoch(copies, params, average_mode, hw, tail, n_shards)
-    return new_params, float(total_cost)
+    obs = Observation(f"epoch_cost_{iteration}")
+    out = raw.observe(obs, F.sum("cost").alias("cost"))
+    copies = out.filter(F.col("node_id") >= 0).select("node_id", "side", "blob")
+    return _combine_epoch(copies, params, hw, tail, n_shards), obs
 
 
 @contextmanager
@@ -603,25 +551,15 @@ def static_epoch_plan(spark):
 
 def preshard_cooc(cooc: DataFrame, *, seed: int, n_shards: int) -> DataFrame:
     """Fixed-shard cooc relation for a whole training run: grid-label once
-    (same draw train_epoch would make at iteration 0), repartition by the
-    collision-free labels. Caller persists; every epoch then reads the
-    cache with no cooc-side exchange — faithful to the reference, whose
-    epoch shuffle re-permutes entry ORDER only (Permutation.java:21-23);
-    the order still re-draws per epoch via `_ord` inside train_epoch."""
-    grid = max(1, round(n_shards ** 0.5))
-    n_shards = grid * grid
-    labels = collision_free_labels(n_shards)
-    lab_arr = F.array(*[F.lit(int(v)).cast("long") for v in labels])
-    shard_key = F.element_at(
-        lab_arr,
-        (
-            F.pmod(F.xxhash64("i", F.lit(seed)), F.lit(grid)) * grid
-            + F.pmod(F.xxhash64("j", F.lit(seed + 7919)), F.lit(grid))
-        ).cast("int")
-        + 1,
-    )
+    (_grid_blocks), repartition by the collision-free labels. Caller
+    persists; every epoch then reads the cache with no cooc-side exchange —
+    faithful to the reference, whose epoch shuffle re-permutes entry ORDER
+    only (Permutation.java:21-23); the order still re-draws per epoch via
+    `_ord` inside train_epoch."""
+    grid, row_h, col_h, label = _grid_blocks(seed, n_shards)
+    shard_key = label(row_h("i") * grid + col_h("j"))
     return cooc.select("i", "j", "x", shard_key.alias("shard")).repartition(
-        n_shards, "shard"
+        grid * grid, "shard"
     )
 
 
@@ -678,7 +616,6 @@ def optimize(
     seed: int = 42,
     n_shards: int | None = None,
     batch: int = 4096,
-    average_mode: str = "hybrid",
     checkpoint_dir: str | None = None,
     start_params: DataFrame | None = None,
     start_epoch: int = 0,
@@ -747,7 +684,6 @@ def optimize(
             new_params, obs = train_epoch(
                 cooc, params, dim=dim, method=method, cost=cost, max_x=max_x,
                 iteration=it, seed=seed, n_shards=n_shards, batch=batch,
-                average_mode=average_mode, eager_cost=False,
             )
             # truncate lineage each epoch; optionally durable checkpoint
             if checkpoint_dir is not None:

@@ -1,5 +1,5 @@
 """GloVe training: kernel math vs hand-computed reference updates, cost
-decrease, deterministic init, averaging semantics."""
+decrease, deterministic init, the hybrid combine."""
 
 from __future__ import annotations
 
@@ -19,6 +19,7 @@ from graph_embeddings_spark.glove.train import (
     extract_embeddings,
     init_params_df,
     optimize,
+    preshard_cooc,
     train_epoch,
 )
 
@@ -191,27 +192,31 @@ def test_optimize_cost_decreases(spark):
     assert len(got) == 4 and len(got[0]["vec"]) == 8
 
 
-def test_presharded_epoch_matches_adhoc_at_iteration0(spark):
-    """preshard_cooc uses the same iteration-0 block draw as the ad-hoc
-    path, so epoch 0 must be BIT-exact either way; later epochs keep the
-    fixed membership (the reference's shuffle re-permutes order only)."""
-    from graph_embeddings_spark.glove.train import preshard_cooc
-
+def test_presharded_epoch_trains_at_iteration1(spark):
+    """Block membership is fixed by preshard_cooc for the whole run (the
+    reference's shuffle re-permutes order only), so a later epoch over the
+    same relation still trains: only the within-shard order re-draws."""
     cooc, nodes = _tiny_cooc(spark)
     params = init_params_df(nodes, 4, 42, "adagrad")
-    kw = dict(dim=4, method="adagrad", cost="glove", max_x=3.0,
-              iteration=0, seed=42, n_shards=4, batch=1)
-    a, cost_a = train_epoch(cooc, params, **kw)
     pre = preshard_cooc(cooc, seed=42, n_shards=4).persist()
-    b, cost_b = train_epoch(pre, params, **kw)
-    rows_a = {r["node_id"]: (list(r["focus"]), list(r["context"]), r["f_bias"]) for r in a.collect()}
-    rows_b = {r["node_id"]: (list(r["focus"]), list(r["context"]), r["f_bias"]) for r in b.collect()}
-    assert cost_a == pytest.approx(cost_b, rel=0, abs=0)
-    assert rows_a == rows_b
-    # iteration 1 on the presharded relation still trains (order re-draws)
-    c, cost_c = train_epoch(pre, params, **{**kw, "iteration": 1})
-    assert cost_c > 0 and c.count() == 4
+    new_params, obs = train_epoch(
+        pre, params, dim=4, method="adagrad", cost="glove", max_x=3.0,
+        iteration=1, seed=42, n_shards=4, batch=1,
+    )
+    assert new_params.count() == 4
+    assert obs.get["cost"] > 0
     pre.unpersist()
+
+
+def test_train_epoch_requires_presharded_cooc(spark):
+    """A cooc without a `shard` column fails loudly and names the fix."""
+    cooc, nodes = _tiny_cooc(spark)
+    params = init_params_df(nodes, 4, 42, "adagrad")
+    with pytest.raises(ValueError, match="preshard_cooc"):
+        train_epoch(
+            cooc, params, dim=4, method="adagrad", cost="glove", max_x=3.0,
+            iteration=0, seed=42, n_shards=2, batch=1,
+        )
 
 
 def test_extract_embeddings_is_average(spark):
@@ -229,12 +234,12 @@ def test_untouched_nodes_keep_params(spark):
     nodes = spark.createDataFrame([(i,) for i in range(6)], "node_id long")  # 4,5 untouched
     params = init_params_df(nodes, 4, 42, "adagrad")
     before = {r["node_id"]: r["focus"] for r in params.collect()}
-    new_params, cost = train_epoch(
-        cooc, params, dim=4, method="adagrad", cost="glove", max_x=3.0,
-        iteration=0, seed=42, n_shards=2, batch=1,
+    new_params, obs = train_epoch(
+        preshard_cooc(cooc, seed=42, n_shards=2), params, dim=4, method="adagrad",
+        cost="glove", max_x=3.0, iteration=0, seed=42, n_shards=2, batch=1,
     )
     after = {r["node_id"]: r["focus"] for r in new_params.collect()}
-    assert cost > 0
+    assert obs.get["cost"] > 0
     assert after[4] == before[4] and after[5] == before[5]
     assert after[0] != before[0]  # touched node moved
 
@@ -299,9 +304,9 @@ def test_shards_for_sizing():
 
 
 def test_combine_epoch_matches_hand_values(spark):
-    """The Arrow combine reproduces the documented formulas exactly:
-    hybrid = delta-sum arrays + per-side mean biases, untouched rows (and
-    untouched SIDES of touched rows) pass through."""
+    """The Arrow combine reproduces the documented hybrid formula exactly:
+    delta-sum arrays + per-side mean biases, untouched rows (and untouched
+    SIDES of touched rows) pass through."""
     import numpy as np
     from graph_embeddings_spark.glove.train import (
         PARAMS_SCHEMA,
@@ -330,7 +335,7 @@ def test_combine_epoch_matches_hand_values(spark):
         [copy(1, 0, 11.0, 3.0), copy(1, 0, 13.0, 5.0), copy(1, 1, 12.0, 6.0)],
         _SIDE_SCHEMA,
     )
-    got = {r["node_id"]: r for r in _combine_epoch(copies, params, "hybrid", hw, tail).collect()}
+    got = {r["node_id"]: r for r in _combine_epoch(copies, params, hw, tail).collect()}
     assert np.allclose(got[1]["focus"], [14.0, 14.0])          # 10 + (11-10) + (13-10)
     assert np.allclose(got[1]["context"], [12.0, 12.0])        # 11 + (12-11)
     assert got[1]["f_bias"] == pytest.approx(4.0)              # mean(3, 5)
@@ -340,11 +345,6 @@ def test_combine_epoch_matches_hand_values(spark):
     assert np.allclose(got[2]["focus"], [20.0, 20.0])          # untouched
     assert got[2]["f_bias"] == pytest.approx(2.0)
     assert np.allclose(got[2]["state"], [22.0] * 6)
-
-    got_m = {r["node_id"]: r for r in _combine_epoch(copies, params, "mean", hw, tail).collect()}
-    assert np.allclose(got_m[1]["focus"], [12.0, 12.0])        # mean(11, 13)
-    got_s = {r["node_id"]: r for r in _combine_epoch(copies, params, "sum_delta", hw, tail).collect()}
-    assert got_s[1]["f_bias"] == pytest.approx(1.0 + 2.0 + 4.0)  # delta sum
 
 
 def test_missing_param_node_fails_loudly(spark):
@@ -358,8 +358,8 @@ def test_missing_param_node_fails_loudly(spark):
     import py4j.protocol
     with pytest.raises((py4j.protocol.Py4JJavaError, Exception)) as exc:
         new_params, _ = train_epoch(
-            cooc, params, dim=4, method="adagrad", cost="glove", max_x=3.0,
-            iteration=0, seed=42, n_shards=2, batch=1,
+            preshard_cooc(cooc, seed=42, n_shards=2), params, dim=4, method="adagrad",
+            cost="glove", max_x=3.0, iteration=0, seed=42, n_shards=2, batch=1,
         )
         new_params.collect()
     assert "missing from shipped params" in str(exc.value)

@@ -1,7 +1,7 @@
 """Scalar similarity functions X1-X10 vs hand-computed values (SURVEY.md
 §2.7), including the tokenizer's stopword/len<=1 rules, the date direction
-gate, and the numeric bug-fix; plus Spark column forms and the
-canonicalization join end-to-end."""
+gate, and the numeric bug-fix; plus the Spark column form (similarity_col)
+and the canonicalization join end-to-end."""
 
 from __future__ import annotations
 
@@ -16,13 +16,12 @@ from graph_embeddings_spark.functions.similarity import (
     ngram_jaccard_py,
     normalized_levenshtein_py,
     numeric_similarity_py,
+    similarity_col,
     token_cosine_py,
     token_jaccard_py,
-    token_jaccard_col,
-    normalized_levenshtein_col,
     tokenize_py,
 )
-from graph_embeddings_spark.graph.canonicalize import similarity_pairs
+from graph_embeddings_spark.graph.canonicalize import _STRING_METRICS, similarity_pairs
 
 
 # ---------------------------------------------------------------------------
@@ -81,6 +80,10 @@ def test_numeric_similarity():
     assert numeric_similarity_py("7", "7") == 1.0
     # distance shifts the optimum: |a-b|=5 with distance=5 -> sim 1
     assert numeric_similarity_py("10", "15", smooth=0.5, distance=5.0) == pytest.approx(1.0)
+    # operands must fit int64, as the shipping try_cast('long') requires
+    assert numeric_similarity_py(str(2**63 - 1), str(2**63 - 2)) == pytest.approx(2 ** -0.5)
+    assert numeric_similarity_py(str(2**63), "1") == 0.0
+    assert numeric_similarity_py("1", str(-(2**63) - 1)) == 0.0
 
 
 def test_date_similarity_units_and_gate():
@@ -104,25 +107,39 @@ def test_make_metric_binding():
 
 
 # ---------------------------------------------------------------------------
-# Spark column forms match the Python scalars
+# similarity_col (the one column form) matches the Python scalars
 # ---------------------------------------------------------------------------
 
+_METRIC_STRINGS = [
+    "International Business Machines",
+    "Internat. Business Machines",
+    "alpha beta beta gamma",      # repeated token -> count profile matters
+    "alpha beta",
+    "the of and a",               # all stopwords -> empty profile
+    "xy",                         # short tokens dropped -> empty token set
+    "",
+    "same same same",
+    "kitten",
+    "sitting",
+]
+
+
 def test_column_forms_match_python(spark):
-    rows = [
-        ("the quick fox", "quick dog"),
-        ("kitten", "sitting"),
-        ("same", "same"),
-        ("", ""),
-    ]
-    df = spark.createDataFrame(rows, "a string, b string")
+    """Every string metric's column form (codegen for levenshtein, the
+    Arrow UDF for the rest) equals its scalar on count profiles, empty
+    profiles, empty strings and equal pairs."""
+    from itertools import combinations
+
+    methods = sorted(_STRING_METRICS)
+    pairs = list(combinations(_METRIC_STRINGS, 2)) + [(s, s) for s in _METRIC_STRINGS]
+    df = spark.createDataFrame(pairs, "a string, b string")
     got = df.select(
-        "a", "b",
-        token_jaccard_col(F.col("a"), F.col("b")).alias("tj"),
-        normalized_levenshtein_col(F.col("a"), F.col("b")).alias("nl"),
+        "a", "b", *[similarity_col(m, F.col("a"), F.col("b")).alias(m) for m in methods]
     ).collect()
     for r in got:
-        assert r["tj"] == pytest.approx(token_jaccard_py(r["a"], r["b"]), abs=1e-9)
-        assert r["nl"] == pytest.approx(normalized_levenshtein_py(r["a"], r["b"]), abs=1e-9)
+        for m in methods:
+            want = make_metric(m)(r["a"], r["b"])
+            assert r[m] == pytest.approx(want, abs=1e-12), (m, r["a"], r["b"])
 
 
 # ---------------------------------------------------------------------------
@@ -184,67 +201,54 @@ def test_similarity_edges_bidirectional(spark):
 
 
 # ---------------------------------------------------------------------------
-# Round-3 column forms: cosine twins (X4/X6/X8) + date (X10) vs the scalars
+# Cosine twins (X4/X6/X8) through similarity_col vs the scalars
 # ---------------------------------------------------------------------------
 
-_COSINE_STRINGS = [
-    "International Business Machines",
-    "Internat. Business Machines",
-    "alpha beta beta gamma",      # repeated token -> count profile matters
-    "alpha beta",
-    "the of and a",               # all stopwords -> empty profile
-    "xy",                         # short tokens dropped -> empty token set
-    "",
-    "same same same",
-]
+def _metric_pairs():
+    from itertools import combinations
+
+    return list(combinations(_METRIC_STRINGS, 2)) + [(s, s) for s in _METRIC_STRINGS]
 
 
 def test_token_cosine_col_matches_scalar(spark):
-    from itertools import combinations
-
-    from graph_embeddings_spark.functions.similarity import (
-        token_cosine_col,
-        token_cosine_py,
-    )
-    from pyspark.sql import functions as F
-
-    pairs = list(combinations(_COSINE_STRINGS, 2)) + [(s, s) for s in _COSINE_STRINGS]
-    df = spark.createDataFrame(pairs, "a string, b string")
-    got = df.select("a", "b", token_cosine_col(F.col("a"), F.col("b")).alias("s")).collect()
+    df = spark.createDataFrame(_metric_pairs(), "a string, b string")
+    got = df.select(
+        "a", "b", similarity_col("token_cosine", F.col("a"), F.col("b")).alias("s")
+    ).collect()
     for r in got:
         assert r["s"] == pytest.approx(token_cosine_py(r["a"], r["b"]), abs=1e-12), (r["a"], r["b"])
 
 
 def test_ngram_cosine_col_matches_scalar(spark):
-    from itertools import combinations
+    """The ngram width reaches the column form: k=2 and k=3 each match
+    the scalar at that width."""
+    from graph_embeddings_spark.functions.similarity import ngram_cosine_py
 
-    from graph_embeddings_spark.functions.similarity import (
-        ngram_cosine_col,
-        ngram_cosine_py,
-    )
-    from pyspark.sql import functions as F
-
-    pairs = list(combinations(_COSINE_STRINGS, 2)) + [(s, s) for s in _COSINE_STRINGS]
-    df = spark.createDataFrame(pairs, "a string, b string")
-    got = df.select("a", "b", ngram_cosine_col(F.col("a"), F.col("b"), 3).alias("s")).collect()
+    df = spark.createDataFrame(_metric_pairs(), "a string, b string")
+    got = df.select(
+        "a", "b",
+        *[similarity_col("ngram_cosine", F.col("a"), F.col("b"), ngram=k).alias(f"s{k}")
+          for k in (2, 3)],
+    ).collect()
     for r in got:
-        assert r["s"] == pytest.approx(ngram_cosine_py(r["a"], r["b"], 3), abs=1e-12), (r["a"], r["b"])
+        for k in (2, 3):
+            want = ngram_cosine_py(r["a"], r["b"], k)
+            assert r[f"s{k}"] == pytest.approx(want, abs=1e-12), (k, r["a"], r["b"])
 
+
+# ---------------------------------------------------------------------------
+# Date column form (X10) vs the scalar
+# ---------------------------------------------------------------------------
 
 @pytest.mark.parametrize("unit", ["days", "months", "years"])
 @pytest.mark.parametrize("direction", ["bidirectional", "backwards", "forwards"])
 def test_date_similarity_col_matches_scalar(spark, unit, direction):
-    """The relational date path (X10 column form) == the reference scalar
-    (Date.java:31-66 semantics incl. ChronoUnit truncation-toward-zero and
-    the equality-before-gate rule) on a spread of date pairs."""
+    """The date column form (similarity_col over yyyyMMdd labels) == the
+    reference scalar (Date.java:31-66 semantics incl. ChronoUnit
+    truncation-toward-zero and the equality-before-gate rule) on a spread
+    of date pairs."""
     import random
     from datetime import date, timedelta
-
-    from graph_embeddings_spark.functions.similarity import (
-        date_similarity_col,
-        date_similarity_py,
-    )
-    from pyspark.sql import functions as F
 
     rng = random.Random(7)
     base = date(1995, 6, 15)
@@ -256,21 +260,23 @@ def test_date_similarity_col_matches_scalar(spark, unit, direction):
     # month-boundary edge: day-of-month comparison drives the truncation
     pairs += [(date(2000, 1, 31), date(2000, 3, 1)), (date(2000, 3, 1), date(2000, 1, 31)),
               (date(2000, 1, 15), date(2001, 1, 14)), (date(2001, 1, 14), date(2000, 1, 15))]
-    df = spark.createDataFrame(pairs, "da date, db date")
+    df = spark.createDataFrame(
+        [(d1.strftime("%Y%m%d"), d2.strftime("%Y%m%d")) for d1, d2 in pairs],
+        "a string, b string",
+    )
     got = df.select(
-        "da", "db",
-        date_similarity_col(
-            F.col("da"), F.col("db"), unit=unit, smooth=0.5, distance=0.0,
-            time_direction=direction,
+        "a", "b",
+        similarity_col(
+            f"date_{unit}", F.col("a"), F.col("b"), smooth=0.5, distance=0.0,
+            pattern="iso", time=direction,
         ).alias("s"),
     ).collect()
     for r in got:
         want = date_similarity_py(
-            r["da"].strftime("%Y%m%d"), r["db"].strftime("%Y%m%d"),
-            unit=unit, smooth=0.5, distance=0.0, pattern="iso",
+            r["a"], r["b"], unit=unit, smooth=0.5, distance=0.0, pattern="iso",
             time_direction=direction,
         )
-        assert r["s"] == pytest.approx(want, abs=1e-12), (r["da"], r["db"], unit, direction)
+        assert r["s"] == pytest.approx(want, abs=1e-12), (r["a"], r["b"], unit, direction)
 
 
 def test_token_blocking_recall_not_truncated(spark):
@@ -291,29 +297,17 @@ def test_token_blocking_recall_not_truncated(spark):
     assert all(2 not in p for p in got)
 
 
-def test_tokenizer_java_trim_parity(spark):
-    """Tokens carrying tabs/newlines: the column form must agree with the
-    scalar form, both using Java String.trim semantics (strip <= U+0020)."""
-    from pyspark.sql import functions as F
-
-    from graph_embeddings_spark.functions.similarity import (
-        token_jaccard_col, token_jaccard_py,
-    )
-
+def test_tokenizer_java_trim_parity():
+    """Tokens carrying tabs/newlines are trimmed with Java String.trim
+    semantics (strip <= U+0020), not Python's unicode str.strip."""
     a, b = "foo\tbar baz\n qux", "foo\tbar baz"
-    expected = token_jaccard_py(a, b)
-    got = (
-        spark.range(1)
-        .select(token_jaccard_col(F.lit(a), F.lit(b)).alias("sim"))
-        .collect()[0]["sim"]
-    )
-    assert got == pytest.approx(expected)
-    # sanity: the scalar form itself sees {foo\tbar, baz, qux} vs {foo\tbar, baz}
-    assert expected == pytest.approx(2 / 3)
+    assert tokenize_py(a) == ["foo\tbar", "baz", "qux"]
+    assert token_jaccard_py(a, b) == pytest.approx(2 / 3)
+    assert tokenize_py("\xa0x\xa0") == ["\xa0x\xa0"]  # NBSP is above U+0020
 
 
 # ---------------------------------------------------------------------------
-# Round-5: _exact_rescore JVM dispatch (levenshtein/numeric/date) vs scalars
+# _exact_rescore JVM dispatch (levenshtein/numeric/date) vs scalars
 # ---------------------------------------------------------------------------
 
 def _rescore_pairs(spark, pairs):
@@ -332,7 +326,7 @@ def _rescore_pairs(spark, pairs):
             "numeric", {"smooth": 0.5, "threshold_distance": 2.0},
             [("100", "103"), ("5", "5"), ("5.5", "7"), ("", "9"),
              (" 42 ", "42"), ("007", "7"), ("100^^xsd:int", "103"),
-             ("9999999999", "9999999998")],
+             ("9999999999", "9999999998"), ("", "")],
         ),
         (
             "date_days", {"smooth": 0.5, "threshold_distance": 3.0},
@@ -341,12 +335,13 @@ def _rescore_pairs(spark, pairs):
             # distance formula even though distance=3 would score 2^-0.5
             [("20200101", "20200104"), ("20200101", "20200101"),
              ("20200101", "2020-01-01"), ("", "20200101"),
-             ("20200301", "20200101"), ("20200101^^xsd:date", "20200401")],
+             ("20200301", "20200101"), ("20200101^^xsd:date", "20200401"),
+             ("", "")],
         ),
         (
             "date_months", {"smooth": 0.5, "time": "backwards"},
             [("20200131", "20200301"), ("20200301", "20200131"),
-             ("20200115", "20200214"), ("20200115", "20200115")],
+             ("20200115", "20200214"), ("20200115", "20200115"), ("", "")],
         ),
         (
             "date_years", {"smooth": 0.5, "time": "forwards"},
@@ -356,14 +351,14 @@ def _rescore_pairs(spark, pairs):
     ],
 )
 def test_jvm_rescore_dispatch_matches_scalar(spark, method, kw, cases):
-    """The measured JVM dispatch (graph/canonicalize._jvm_rescore_col) must
-    reproduce the reference scalar clause-for-clause, including string
-    equality before parsing, empty/unparseable -> 0.0, datatype-suffix
-    stripping, and the date direction gates."""
-    from graph_embeddings_spark.graph.canonicalize import _exact_rescore, _jvm_rescore_col
+    """The codegen rescore (similarity_col, as _exact_rescore runs it) must
+    reproduce the reference scalar clause-for-clause, including the empty
+    operand -> 0.0 BEFORE string equality (so ('', '') scores 0.0,
+    Date.java:38-39), string equality before parsing, unparseable -> 0.0,
+    datatype-suffix stripping, and the date direction gates."""
+    from graph_embeddings_spark.graph.canonicalize import _exact_rescore
 
     group = SimilarityGroup("p:x", "p:x", method=method, threshold=0.0, **kw)
-    assert _jvm_rescore_col(group) is not None  # the dispatch actually fires
     metric = make_metric(
         method, ngram=group.ngram, smooth=group.smooth,
         distance=group.threshold_distance, pattern=group.pattern, time=group.time,

@@ -351,7 +351,7 @@ def _esc_literal(s: str) -> str:
     return f'"{out}"'
 
 
-@settings(max_examples=60, deadline=None)
+@settings(max_examples=max(60, settings.default.max_examples), deadline=None)
 @given(
     st.lists(
         st.tuples(

@@ -18,8 +18,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 # shared with bench.py — one corpus rule for all scaling evidence
-# (epoch_breakdown_probe.py imports it from here; keep the re-export)
-from graph_embeddings_spark.glove.synth import synthetic_cooc  # noqa: E402,F401
+from graph_embeddings_spark.glove.synth import synthetic_cooc  # noqa: E402
 
 
 def main():
@@ -60,7 +59,6 @@ def main():
             new_params, _obs = train_epoch(
                 cooc, params, dim=32, method="adagrad", cost="glove", max_x=5.0,
                 iteration=it, seed=42, n_shards=n_shards, batch=4096,
-                eager_cost=False,  # the fused optimize() path
             )
             new_params.write.mode("overwrite").format("noop").save()
             trials.append(round(time.perf_counter() - t0, 3))

@@ -137,7 +137,7 @@ def main():
     params = init_params_df(nodes, 4, 42, "adagrad")
     new_params, _obs = train_epoch(
         cooc, params, dim=4, method="adagrad", cost="glove", max_x=2.0,
-        iteration=0, seed=42, n_shards=4, batch=64, eager_cost=False,
+        iteration=0, seed=42, n_shards=4, batch=64,
     )
     add(
         "GloVe epoch (presharded cogroup train + Arrow combine, one job)",
