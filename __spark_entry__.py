@@ -588,15 +588,14 @@ def _owned(build):
     return out
 
 
-def q_dedup_minhash_lsh(spark, sf_dir, n_docs: int = 400):
+def q_dedup_minhash_lsh(spark, sf_dir):
     from graph_embeddings_spark.datapipe.dedup import minhash_lsh_dedup
 
     # synthetic docs share one small vocabulary, so the TRUE near-dup pair
     # set is quadratic in corpus size — bound the probe so the run measures
-    # the operator, not an inherently O(n²) answer. Default 400 is the
-    # check-shaped probe (driver correctness budget); bench.py passes
-    # n_docs=1000 to keep its headline comparable with earlier rounds.
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < n_docs)
+    # the operator, not an inherently O(n²) answer: 400 docs keep the
+    # correctness check's time budget.
+    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 400)
     return _owned(
         lambda reg: minhash_lsh_dedup(docs, threshold=0.8, cache_registry=reg).select(
             "a", "b", F.round("jac", 6).alias("jac")

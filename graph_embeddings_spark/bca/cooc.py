@@ -32,7 +32,7 @@ Scale design:
     unbounded iterative plan otherwise blows up the optimizer; on a real
     cluster this maps to checkpoint dirs / Iceberg round tables.
   * rounds are bounded: paint decays by >= (1-alpha) per hop, so
-    #rounds <= log(eps)/log(1-alpha); a max_rounds guard enforces it.
+    #rounds <= log(eps)/log(1-alpha); max_rounds_bound enforces it.
   * hub-node skew (north_rule): the expansion join fans out by out-degree;
     AQE skew-join splits oversized partitions, and `salt_degree` splits the
     adjacency rows of ultra-high-degree nodes over salted sub-keys so a
@@ -48,6 +48,13 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from ..config import NORM_COUNTS, NORM_NONE, NORM_UNITY
+
+# 'auto' picks the broadcast strategy up to this many edges (CSR ≈ 24 B/edge,
+# so ≈ 50 MB shipped to every task)
+_BROADCAST_EDGE_LIMIT = 2_000_000
+
+# the loop probes its checkpointed state for emptiness every this many rounds
+_PROBE_EVERY = 4
 
 
 def build_adjacency(edges: DataFrame, direction: str, salt_degree: int = 0) -> DataFrame:
@@ -150,10 +157,7 @@ def _one_direction(
     alpha: float,
     epsilon: float,
     max_rounds: int,
-    use_checkpoint: bool = True,
     salt_degree: int = 0,
-    probe_every: int = 4,
-    diagnostics: dict | None = None,
 ) -> DataFrame:
     """Run the paint loop for every root in `roots` (node_id long) against a
     prebuilt adjacency; returns un-normalized bcv(i, j, x) with the root
@@ -163,19 +167,15 @@ def _one_direction(
     reference each round's state — lazy rounds would be recomputed by the
     final union, measured 6x slower). The separate EMPTINESS probe is the
     second job per round; it only decides early exit, so it runs every
-    `probe_every` rounds — the decay bound caps wasted empty rounds at
+    _PROBE_EVERY (K) rounds — the decay bound caps wasted empty rounds at
     K-1, each of which is a no-op job over an empty checkpointed state."""
-    import time as _time
-
     wet = roots.select(
         F.col("node_id").alias("root"),
         F.col("node_id").alias("node"),
         F.lit(1.0).alias("paint"),
     )
     retained_parts: list[DataFrame] = []
-    round_sec: list[float] = []
     for _round in range(max_rounds):
-        _t0 = _time.perf_counter()
         retained_parts.append(
             wet.select("root", "node", (F.lit(alpha) * F.col("paint")).alias("x"))
         )
@@ -190,20 +190,9 @@ def _one_direction(
                 F.explode(F.sequence(F.lit(0), F.lit(salt_degree - 1)).cast("array<int>")),
             )
             join_keys = ["node", "_salt"]
-        wet = expand_round(frontier, adj, alpha, epsilon, join_keys)
-        if use_checkpoint:
-            wet = wet.localCheckpoint(eager=True)
-            round_sec.append(_time.perf_counter() - _t0)
-            if _round % probe_every == probe_every - 1 and not wet.take(1):
-                break
-        else:
-            round_sec.append(_time.perf_counter() - _t0)
-        # without checkpointing we rely on the max_rounds bound only
-    if diagnostics is not None:
-        # the eager checkpoint makes each entry a real per-round wall time
-        # (join + groupBy + materialize); lazy rounds would all read ~0
-        diagnostics.setdefault("rounds", []).append(len(round_sec))
-        diagnostics.setdefault("round_sec", []).append([round(s, 3) for s in round_sec])
+        wet = expand_round(frontier, adj, alpha, epsilon, join_keys).localCheckpoint(eager=True)
+        if _round % _PROBE_EVERY == _PROBE_EVERY - 1 and not wet.take(1):
+            break
     bcv = retained_parts[0]
     for p in retained_parts[1:]:
         bcv = bcv.unionAll(p)
@@ -416,12 +405,8 @@ def bca_cooccurrence(
     epsilon: float,
     directed: bool = False,
     normalize: str = NORM_NONE,
-    max_rounds: int | None = None,
     salt_degree: int = 0,
-    use_checkpoint: bool = True,
     strategy: str = "auto",
-    broadcast_edge_limit: int = 2_000_000,
-    diagnostics: dict | None = None,
 ) -> CoocResult:
     """Full BCA stage (BookmarkColoring.java:32-120 analog).
 
@@ -440,11 +425,11 @@ def bca_cooccurrence(
         frame (toPandas), never boxed Rows.
       'loop': the level-synchronous DataFrame loop — the beyond-memory path
         for graphs too big to broadcast.
-      'auto': broadcast iff edge count <= broadcast_edge_limit, probed with
+      'auto': broadcast iff edge count <= _BROADCAST_EDGE_LIMIT, probed with
         a single limit+1 Arrow pull that doubles as the build-side data
         (no separate count() action).
     """
-    rounds = max_rounds or max_rounds_bound(alpha, epsilon)
+    rounds = max_rounds_bound(alpha, epsilon)
     roots = nodes.select("node_id")
     n_nodes = nodes.count()
 
@@ -454,59 +439,36 @@ def bca_cooccurrence(
         # pull at most limit+1 edge rows via Arrow; under the limit the
         # frame IS the CSR input (no second scan), over it -> loop path
         # (the analog of a broadcast join's build-side size probe)
-        probe = _edges_to_pandas(edges.limit(broadcast_edge_limit + 1))
-        if len(probe) <= broadcast_edge_limit:
+        probe = _edges_to_pandas(edges.limit(_BROADCAST_EDGE_LIMIT + 1))
+        if len(probe) <= _BROADCAST_EDGE_LIMIT:
             strategy, edge_pdf = "broadcast", probe
         else:
             strategy = "loop"
+    adj_caches: list[DataFrame] = []
     if strategy == "broadcast":
         bcv = _broadcast_bca(
             nodes, edges, alpha, epsilon, directed, int(n_nodes), edge_pdf=edge_pdf
         )
-    import time as _time
-
-    adj_caches: list[DataFrame] = []
-    if strategy == "broadcast":
-        pass
     elif directed:
         # persisted: every round's expansion join reads the adjacency; an
         # unpersisted plan would re-shuffle (and re-scan) it per round, and
         # the cached InMemoryTableScan keeps the repartition('node') output
         # partitioning so the join only exchanges the frontier side
-        _ta = _time.perf_counter()
         adj_out = build_adjacency(edges, "out", salt_degree).persist()
         adj_in = build_adjacency(edges, "in", salt_degree).persist()
-        adj_out.count(), adj_in.count()  # fill the cache HERE, not fused
-        # into round 0's join — round timings then measure rounds only
         adj_caches += [adj_out, adj_in]
-        if diagnostics is not None:
-            diagnostics["adj_build_sec"] = round(_time.perf_counter() - _ta, 3)
-        fwd = _one_direction(
-            roots, adj_out, alpha, epsilon, rounds, use_checkpoint, salt_degree,
-            diagnostics=diagnostics,
-        )
-        rev = _one_direction(
-            roots, adj_in, alpha, epsilon, rounds, use_checkpoint, salt_degree,
-            diagnostics=diagnostics,
-        )
+        fwd = _one_direction(roots, adj_out, alpha, epsilon, rounds, salt_degree)
+        rev = _one_direction(roots, adj_in, alpha, epsilon, rounds, salt_degree)
         bcv = (
             fwd.unionAll(rev)
             .groupBy("i", "j")
             .agg(F.sum("x").alias("x"))
         )
     else:
-        _ta = _time.perf_counter()
         adj = build_adjacency(edges, "both", salt_degree).persist()
-        adj.count()  # fill the cache HERE, not fused into round 0's join
         adj_caches.append(adj)
-        if diagnostics is not None:
-            diagnostics["adj_build_sec"] = round(_time.perf_counter() - _ta, 3)
-        bcv = _one_direction(
-            roots, adj, alpha, epsilon, rounds, use_checkpoint, salt_degree,
-            diagnostics=diagnostics,
-        )
+        bcv = _one_direction(roots, adj, alpha, epsilon, rounds, salt_degree)
 
-    _tm = _time.perf_counter()
     normed = normalize_bcvs(bcv, normalize)
     normed = normed.persist()
     # A6/A7: global max + co-occurrence count + vocab size
@@ -514,15 +476,11 @@ def bca_cooccurrence(
     agg = normed.agg(
         F.count("*").alias("n"), F.max("x").alias("mx")
     ).collect()[0]
-    if diagnostics is not None:
-        # union-of-rounds groupBy + normalize + persist + the A6/A7 pass
-        diagnostics["merge_sec"] = round(_time.perf_counter() - _tm, 3)
     for a in adj_caches:  # bcv is materialized now; drop the round caches
         a.unpersist()
-    vocab = n_nodes
     return CoocResult(
         cooc=normed,
-        vocab_size=int(vocab),
+        vocab_size=int(n_nodes),
         co_count=int(agg["n"]),
         max_x=float(agg["mx"]) if agg["mx"] is not None else 0.0,
     )

@@ -193,7 +193,6 @@ def minhash_lsh_dedup(
     bands: int | None = None,
     estimate_margin: float | None = 0.2,
     cache_registry: list | None = None,
-    diagnostics: dict | None = None,
 ) -> DataFrame:
     """-> (a, b, jac >= threshold): banded-MinHash candidates + exact
     rescore. The scale path: candidate generation touches each doc
@@ -258,7 +257,7 @@ def minhash_lsh_dedup(
     est_min = None if estimate_margin is None else threshold - estimate_margin
     cands = lsh_candidate_pairs_filtered(
         sig, "id", num_hashes, bands, est_min=est_min,
-        cache_registry=cache_registry, diagnostics=diagnostics,
+        cache_registry=cache_registry,
     )
     arrs = with_sh.select("id", "_sh", F.size("_sh").alias("_sz"))
     labeled = cands.join(

@@ -48,20 +48,20 @@ def _bp_from_lines(lines: DataFrame, max_df: int) -> DataFrame:
     """(doc_id, _t trimmed line) -> trimmed lines in > max_df distinct docs."""
     return (
         lines.groupBy("_t")
-        .agg(F.count_distinct("doc_id").alias("n_docs"))
-        .filter(F.col("n_docs") > max_df)
+        .agg(F.count_distinct("doc_id").alias("doc_freq"))
+        .filter(F.col("doc_freq") > max_df)
     )
 
 
 def boilerplate_lines(
     docs: DataFrame, max_df: int, text_col: str = "text"
 ) -> DataFrame:
-    """-> (line, n_docs) for trimmed lines present in more than max_df
+    """-> (line, doc_freq) for trimmed lines present in more than max_df
     DISTINCT documents."""
     lines = _doc_lines(docs, text_col).select(
         "doc_id", F.trim(F.col("line")).alias("_t")
     )
-    return _bp_from_lines(lines, max_df).select(F.col("_t").alias("line"), "n_docs")
+    return _bp_from_lines(lines, max_df).select(F.col("_t").alias("line"), "doc_freq")
 
 
 def remove_boilerplate_lines(

@@ -195,7 +195,6 @@ def lsh_candidate_pairs_filtered(
     max_bucket: int = 1000,
     est_min: float | None = None,
     cache_registry: list | None = None,
-    diagnostics: dict | None = None,
 ) -> DataFrame:
     """Band join + signature-estimate prefilter FUSED into one stage.
 
@@ -204,13 +203,7 @@ def lsh_candidate_pairs_filtered(
     the bucket join itself (zip_with over the two arrays) — before the
     distinct — instead of re-joining the signature table twice afterwards.
     est_min: drop pairs whose estimated jaccard (matching fraction) is
-    below it; None keeps every bucket collision.
-
-    diagnostics (the 'log what you drop' hook): when a dict is passed it
-    receives 'candidates_raw' (distinct bucket-collision pairs BEFORE the
-    estimate prefilter) and 'candidates' (after) as unevaluated DataFrames —
-    benches count them to attribute cost between intrinsic pair density and
-    operator overhead."""
+    below it; None keeps every bucket collision."""
     from pyspark import StorageLevel
 
     banded = sig_df.select(
@@ -233,8 +226,6 @@ def lsh_candidate_pairs_filtered(
     a = sized.select(F.col(id_col).alias("a"), F.col("_sig").alias("_siga"), "band", "bucket")
     b2 = sized.select(F.col(id_col).alias("b"), F.col("_sig").alias("_sigb"), "band", "bucket")
     joined = a.join(b2, ["band", "bucket"], "inner").filter(F.col("a") < F.col("b"))
-    if diagnostics is not None:
-        diagnostics["candidates_raw"] = joined.select("a", "b").distinct()
     if est_min is not None:
         # matching-minhash count as a FOLD of per-index comparisons — fully
         # whole-stage-codegen (GetArrayItem + If), where the previous
@@ -250,11 +241,7 @@ def lsh_candidate_pairs_filtered(
             ],
         )
         joined = joined.filter(matches >= F.lit(int(est_min * num_hashes + 0.999999)))
-    out = joined.select("a", "b").distinct()
-    if diagnostics is not None:
-        diagnostics["candidates"] = out
-        diagnostics["banding"] = {"num_hashes": num_hashes, "bands": bands}
-    return out
+    return joined.select("a", "b").distinct()
 
 
 def lsh_candidate_pairs(

@@ -218,6 +218,7 @@ def run_graph_pipeline(
 
     # -- BCA co-occurrence ---------------------------------------------------
     cooc_caches: list = []
+    built: list[CoocResult] = []
 
     def build_cooc():
         res = bca_cooccurrence(
@@ -225,28 +226,32 @@ def run_graph_pipeline(
             alpha=config.bca.alpha, epsilon=config.bca.epsilon,
             directed=config.bca.directed, normalize=config.bca.normalize,
         )
+        built.append(res)
         cooc_caches.append(res.cooc)  # persisted inside bca_cooccurrence
         return res.cooc
 
     cooc_df = _resumable(spark, work_dir, "cooc", build_cooc, resume, caches=cooc_caches)
-    # co_count/max_x/vocab are one full aggregate pass each — checkpoint
-    # them next to the cooc stage so a fully-resumed run loads three
-    # numbers instead of re-scanning a potentially billions-row table
+    # co_count/max_x/vocab come with a freshly built cooc; they are
+    # checkpointed next to the cooc stage so a fully-resumed run loads
+    # three numbers instead of re-scanning a potentially billions-row table
     meta_path = os.path.join(work_dir, "cooc", "_meta.json") if work_dir else None
-    meta = None
-    if resume and meta_path and os.path.exists(meta_path) and stage_done(work_dir, "cooc"):
+    if built:
+        res = built[0]
+        meta = {"co_count": res.co_count, "max_x": res.max_x, "vocab_size": res.vocab_size}
+    elif os.path.exists(meta_path):  # not built: loaded from its checkpoint
         with open(meta_path) as f:
             meta = json.load(f)
-    if meta is None:
+    else:
+        # a checkpointed cooc stage without _meta.json: one aggregate pass
         agg = cooc_df.agg(F.count("*").alias("n"), F.max("x").alias("mx")).collect()[0]
         meta = {
             "co_count": int(agg["n"]),
             "max_x": float(agg["mx"]) if agg["mx"] is not None else 0.0,
             "vocab_size": nodes.count(),
         }
-        if meta_path:
-            with open(meta_path, "w") as f:
-                json.dump(meta, f)
+    if meta_path:
+        with open(meta_path, "w") as f:
+            json.dump(meta, f)
     cooc = CoocResult(
         cooc=cooc_df, vocab_size=meta["vocab_size"], co_count=meta["co_count"],
         max_x=meta["max_x"],

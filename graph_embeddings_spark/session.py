@@ -13,17 +13,18 @@ from pyspark.sql import SparkSession
 
 
 def effective_cores(requested: int | str) -> int:
-    """Clamp the local[N] worker count to this host's measured useful
-    parallelism. Raw-CPU calibration (tools/scaling_bench.py, documented in
-    BENCH/BASELINE.md) shows this Firecracker VM delivers ~18 effective
-    cores behind 32 visible vCPUs, and Spark runs at local[16]/local[32]
-    measurably REGRESS vs local[8] (JVM task threads + Python workers
+    """Clamp the local[N] worker count to this host's useful parallelism:
+    at most 8, and never more than the host's CPUs. The raw-CPU calibration
+    recorded in BENCH/BASELINE.md shows a 32-vCPU Firecracker VM delivering
+    ~18 effective cores, with Spark at local[16]/local[32] measurably
+    REGRESSING vs local[8] (JVM task threads + Python workers
     oversubscribe). On a real cluster the executor count is the deploy-time
     knob; locally, running more threads than the host can execute just adds
-    scheduling noise to every benchmark. Override the clamp with
-    SPARK_GRAFT_CORE_CLAMP (set it >= 32 to disable)."""
-    clamp = int(os.environ.get("SPARK_GRAFT_CORE_CLAMP", "8"))
-    return min(int(requested), clamp)
+    scheduling noise to every benchmark. SPARK_GRAFT_CORE_CLAMP, when set,
+    replaces the clamp (set it >= the requested count to disable)."""
+    clamp = os.environ.get("SPARK_GRAFT_CORE_CLAMP")
+    limit = int(clamp) if clamp else min(8, os.cpu_count() or 8)
+    return min(int(requested), limit)
 
 
 def _local_dir() -> str | None:

@@ -2,7 +2,7 @@
 
 The reference loads any RDF serialization through Jena into an in-heap
 Model (util/read/JenaReader.java:21-42). Spark-side we parse the *line-
-oriented* N-Triples/N-Quads-lite subset with pure column regexes — one
+oriented* N-Triples/N-Quads subset with pure column regexes — one
 narrow map over `spark.read.text`, no Python, fully parallel over line
 splits of arbitrarily large files. Richer serializations (Turtle, RDF/XML)
 would use a mapInPandas rdflib parser per file — same output contract.
@@ -26,9 +26,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+# subject, predicate, object (groups 1-3), then an optional N-Quads graph
+# term that is matched and dropped, as turtle.py drops TriG graph labels
 _TRIPLE_RE = (
     r"^\s*(<[^>]*>|_:\S+)\s+<([^>]*)>\s+"
-    r"(<[^>]*>|_:\S+|\"(?:[^\"\\]|\\.)*\"(?:@[A-Za-z0-9-]+|\^\^<[^>]*>)?)\s*\.\s*$"
+    r"(<[^>]*>|_:\S+|\"(?:[^\"\\]|\\.)*\"(?:@[A-Za-z0-9-]+|\^\^<[^>]*>)?)"
+    r"(?:\s+(?:<[^>]*>|_:\S+))?\s*\.\s*$"
 )
 
 

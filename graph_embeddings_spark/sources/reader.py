@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame
 
 _EXT_TO_FMT = {
     ".nt": "ntriples",
-    ".nq": "ntriples",  # graph term ignored by the lite parser contract
+    ".nq": "ntriples",  # N-Quads: the parser matches the graph term, drops it
     ".ttl": "turtle",
     ".trig": "turtle",  # TriG = Turtle + graph blocks, same parser
     ".rdf": "rdfxml",

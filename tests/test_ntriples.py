@@ -134,3 +134,24 @@ def test_bad_escape_rows_show_in_parse_errors(spark):
     # disjointness: no line appears in both the triples and error outputs
     emitted_lines = {l for l in lines if any(l.startswith(f"<{s}>") for s in got)}
     assert not set(errs) & emitted_lines
+
+
+def test_nquads_graph_term_dropped(spark, tmp_path):
+    """.nq files route to this parser; the graph term of a quad (IRI or
+    blank node) is matched and dropped, and a default-graph line is a
+    plain triple — none of the three is reported as a parse error."""
+    from graph_embeddings_spark.sources.reader import read_rdf
+
+    path = tmp_path / "quads.nq"
+    path.write_text(
+        '<http://ex/s1> <http://ex/p> <http://ex/o1> <http://ex/g1> .\n'
+        '<http://ex/s2> <http://ex/p> "lit"@en _:g2 .\n'
+        '<http://ex/s3> <http://ex/p> _:b3 .\n'
+    )
+    got = {tuple(r) for r in read_rdf(spark, str(path)).collect()}
+    assert got == {
+        ("http://ex/s1", "http://ex/p", "http://ex/o1", 0),
+        ("http://ex/s2", "http://ex/p", "lit", 2),
+        ("http://ex/s3", "http://ex/p", "_:b3", 1),
+    }
+    assert parse_errors(spark.read.text(str(path))).count() == 0

@@ -131,17 +131,34 @@ def test_link_prediction_auc_raises_when_no_negatives(spark):
 
 def test_resume_from_checkpoint(spark, world, pipe):
     """Re-running with resume=True must reuse checkpoints (same node ids)
-    without recomputing stages."""
+    without recomputing stages. The resumed cooc metadata comes from
+    cooc/_meta.json (or, with that file gone, one aggregate over the
+    checkpointed cooc) and must equal what the fresh BCA build reported."""
+    import os
+
     res, work, cfg = pipe
     pages = web_pages_df(spark, world, N_PAGES, partitions=4)
     aliases = sorted(world.alias_map)
-    res2 = run_pipeline(
-        spark, pages, alias_dict_df(spark, world), aliases, cfg,
-        work_dir=work, resume=True, train=False,
-    )
+
+    def resume():
+        return run_pipeline(
+            spark, pages, alias_dict_df(spark, world), aliases, cfg,
+            work_dir=work, resume=True, train=False,
+        )
+
+    def meta(r):
+        return (r.cooc.co_count, r.cooc.max_x, r.cooc.vocab_size)
+
+    res2 = resume()
     a = {(r["label"], r["node_id"]) for r in res.nodes.collect()}
     b = {(r["label"], r["node_id"]) for r in res2.nodes.collect()}
     assert a == b
+    assert meta(res2) == meta(res)
+
+    meta_path = os.path.join(work, "cooc", "_meta.json")
+    os.remove(meta_path)
+    assert meta(resume()) == meta(res)
+    assert os.path.exists(meta_path)
 
 
 def test_lineage_rows_written(pipe):

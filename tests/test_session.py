@@ -1,0 +1,24 @@
+"""SparkSession factory: the host-aware local[N] core clamp."""
+
+from __future__ import annotations
+
+import os
+
+from graph_embeddings_spark.session import effective_cores
+
+
+def test_core_clamp_follows_host_cpus(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_CORE_CLAMP", raising=False)
+    monkeypatch.setattr(os, "cpu_count", lambda: 2)
+    assert effective_cores(32) == 2
+    monkeypatch.setattr(os, "cpu_count", lambda: 64)
+    assert effective_cores(32) == 8
+    monkeypatch.setattr(os, "cpu_count", lambda: None)
+    assert effective_cores(32) == 8
+
+
+def test_core_clamp_env_override_wins(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_CORE_CLAMP", "16")
+    monkeypatch.setattr(os, "cpu_count", lambda: 2)
+    assert effective_cores(32) == 16
+    assert effective_cores(4) == 4
