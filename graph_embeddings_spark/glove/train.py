@@ -10,30 +10,43 @@ executors share no memory, so (per BASELINE.json north_star) each epoch:
      persisted) and each epoch re-draws only the deterministic WITHIN-
      shard order key `_ord` = xxhash64(j, i, seed*31+epoch) — order
      re-permutes per epoch exactly as upstream, while the epoch's biggest
-     relation never re-shuffles. train_epoch takes only this presharded
-     relation.
-  2. param co-partition — each param HALF ships directly to its grid
-     row/column of shards (computable from the node hash alone, no
-     touched-sides join): focus/f_bias/f-state to the G shards that can
-     train the node's focus side, the context half to its G column
-     shards. This is the only param movement: O(vocab × 2G) half-rows
-     out (G = sqrt(n_shards)), only the trained subset back.
-  3. shard kernel — cogroup(cooc_shard, side_param_rows).applyInArrow runs
-     the exact reference update math vectorized (kernel.train_shard),
-     emitting updated side rows + a per-shard partial cost.
-  4. parameter combine — one shuffle on node_id: numpy segment delta-sum
-     for vectors/state, per-side mean for biases, sides re-zipped into
-     full param rows; untouched rows/sides degrade to pass-through.
+     relation never re-shuffles.
+  2. param transport — every shard receives the side rows it can train
+     (packed [vec | state_half | bias] blobs, _SIDE_SCHEMA).
+  3. shard kernel — _make_train_fn runs the exact reference update math
+     vectorized (kernel.train_shard) over one shard in `_ord` order,
+     emitting the trained side copies + a per-shard partial cost.
+  4. parameter combine — _combine_sides: numpy segment delta-sum for
+     vectors/state, per-side trained-copy mean for biases, sides re-zipped
+     into full param rows; untouched rows/sides pass through.
   5. cost reduction + tolerance check in the driver (Optimizer.java:85-107);
      params checkpointed per epoch -> any run resumes mid-training
      (north_rule).
 
-Scale notes: params never pass through the driver; the averaging is one
-shuffle on node_id; the cogroup is one shuffle on shard. n_shards should be
-sized so a shard's touched params fit executor memory (#entries*dim*~40B).
-Skewed hub nodes appear in many shards — they are averaged over more
-copies, which is exactly the variance damping wanted; the join itself is
-AQE-skew-handled.
+Transports. optimize picks one per run from the input size; both run the
+same kernel (steps 1, 3) and the same combine (step 4), so they give the
+same params and cost history up to float64 summation order:
+
+  * broadcast — when the bytes the driver holds in one epoch (the side
+    blobs, 2·vocab·(dim+hw+tail+1)·4 B, plus at most G times that in
+    trained copies collected back, G = grid side) fit under
+    _BROADCAST_PARAMS_LIMIT (64 MB: ~42k nodes at dim 32, AdaGrad, 4
+    shards). The params live on the driver as one Arrow
+    table sorted by node_id, like the reference's in-memory arrays
+    (Optimizer.java:27-28); an epoch broadcasts the side table, runs ONE
+    mapInArrow over the presharded cooc cache (one shard per partition
+    via the collision-free labels) with no exchange, pulls the copies back
+    with toArrow() and combines them on the driver. The checkpoint is
+    written through Spark in the grid path's layout.
+  * grid — bigger vocabularies: train_epoch ships each param HALF straight
+    to the G shards of its grid row (focus) or column (context),
+    cogroup(cooc_shard, side_rows).applyInArrow runs the kernel, and the
+    combine is one shuffle on node_id into a mapInArrow; params never pass
+    through the driver. The epoch is one job (the cost rides an
+    Observation). n_shards should be sized so a shard's touched params fit
+    executor memory (#entries*dim*~40B). Skewed hub nodes appear in many
+    shards — they are averaged over more copies, which is exactly the
+    variance damping wanted.
 """
 
 from __future__ import annotations
@@ -42,7 +55,6 @@ from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Observation, functions as F
 
 from ..functions.partitioning import collision_free_labels
@@ -99,27 +111,33 @@ def _packed_side_blobs(params: DataFrame, hw: int, tail: int):
     return f_blob, c_blob
 
 
+def _init_batch(ids: np.ndarray, dim: int, seed: int, method: str):
+    """node ids -> their initial PARAMS_SCHEMA record batch (kernel.init_params
+    and init_state, a pure function of (seed, node_id))."""
+    import pyarrow as pa
+
+    focus, context, fb, cb = init_params(ids, dim, seed)
+    return pa.record_batch(
+        {
+            "node_id": pa.array(ids, type=pa.int64()),
+            "focus": _f32_list(focus),
+            "context": _f32_list(context),
+            "f_bias": pa.array(fb.astype(np.float64)),
+            "c_bias": pa.array(cb.astype(np.float64)),
+            "state": _f32_list(init_state(method, dim, len(ids))),
+        }
+    )
+
+
 def init_params_df(nodes: DataFrame, dim: int, seed: int, method: str) -> DataFrame:
     """Deterministic param init per node (kernel.init_params; replaces
     Optimizer.java:50-57's wall-clock-seeded init)."""
 
     def gen(batches):
-        for pdf in batches:
-            ids = pdf["node_id"].to_numpy()
-            focus, context, fb, cb = init_params(ids, dim, seed)
-            st = init_state(method, dim, len(ids))
-            yield pd.DataFrame(
-                {
-                    "node_id": ids,
-                    "focus": list(focus),
-                    "context": list(context),
-                    "f_bias": fb.astype("float64"),
-                    "c_bias": cb.astype("float64"),
-                    "state": list(st),
-                }
-            )
+        for b in batches:
+            yield _init_batch(b.column("node_id").to_numpy(), dim, seed, method)
 
-    return nodes.select("node_id").mapInPandas(gen, PARAMS_SCHEMA)
+    return nodes.select("node_id").mapInArrow(gen, PARAMS_SCHEMA)
 
 
 def _flat_f32(tbl, name: str, n: int) -> np.ndarray:
@@ -154,6 +172,65 @@ def _f32_list(mat: np.ndarray, tail_empty: int = 0):
     )
 
 
+def _combine_sides(
+    ids: np.ndarray,
+    side: np.ndarray,
+    is_old: np.ndarray,
+    mat: np.ndarray,
+    hw: int,
+    tail: int,
+):
+    """The epoch combine's arithmetic, shared by both transports: side rows
+    (node_id, side, packed blob matrix) where every node contributes BOTH
+    pre-epoch side rows (is_old = 1) plus its trained shard copies
+    (is_old = 0) -> one PARAMS_SCHEMA record batch sorted by node_id.
+
+    ONE segment-sum over the packed [vec | state_half | bias] matrix, then
+    delta-sum for the array body and the trained-copy mean for the bias
+    column (the hybrid rule, documented on _combine_epoch). The update
+    new = (sum − old) + (1 − n) · old degrades to `old` at n = 0, so
+    untouched sides need no separate branch."""
+    import pyarrow as pa
+
+    # group key (node, side); secondary sort: old row FIRST in its group
+    key = ids * 2 + side
+    order = np.lexsort((1 - is_old, key))
+    key_s = key[order]
+    uniq, starts, counts = np.unique(key_s, return_index=True, return_counts=True)
+    n = (counts - 1).astype(np.float64)  # TRAINED shard copies per (node, side)
+    touched = n > 0
+
+    # Reorder in float32 (half the temp bytes), accumulate in float64 via
+    # reduceat's dtype — bit-identical to casting up front, since each
+    # element upcasts exactly.
+    mat = mat[order]
+    dim_ = mat.shape[1] - 1 - (hw + tail)
+    total = np.add.reduceat(mat, starts, axis=0, dtype=np.float64)
+    old = mat[starts].astype(np.float64)
+    csum = total - old
+    out = csum + (1.0 - n)[:, None] * old
+    out[touched, -1] = csum[touched, -1] / n[touched]
+    bias = out[:, -1]
+    body = out[:, :-1].astype(np.float32)
+
+    # every node contributes BOTH old side rows, so (node,0)/(node,1)
+    # groups alternate: even positions are focus halves, odd context
+    vec = body[:, :dim_]
+    sth = body[:, dim_:]
+    sf, sc = sth[0::2], sth[1::2]
+    state_full = np.hstack([sf[:, :hw], sc[:, :hw], sf[:, hw:], sc[:, hw:]])
+    return pa.record_batch(
+        {
+            "node_id": pa.array(uniq[0::2] >> 1, type=pa.int64()),
+            "focus": _f32_list(vec[0::2]),
+            "context": _f32_list(vec[1::2]),
+            "f_bias": pa.array(bias[0::2], type=pa.float64()),
+            "c_bias": pa.array(bias[1::2], type=pa.float64()),
+            "state": _f32_list(np.ascontiguousarray(state_full)),
+        }
+    )
+
+
 def _combine_epoch(
     copies: DataFrame,
     params: DataFrame,
@@ -183,11 +260,9 @@ def _combine_epoch(
     zip_with combine, which was 65 of an 84 s epoch at 640k entries — the
     same interpreted-HOF inversion as the MinHash shingler and SimHash
     kernels): copies ∪ old params are repartitioned ONCE on node_id, then a
-    per-partition numpy segment-sum (np.add.reduceat over the id-sorted
-    block, old row first per group) computes the combine, the old-params
-    join, AND the untouched carry-through in the same pass — the formula
-    new = (sum − old) + (1 − n) · old degrades to `old` at n = 0, so
-    untouched nodes need no separate branch.
+    per-partition numpy segment-sum (_combine_sides: np.add.reduceat over
+    the id-sorted block, old row first per group) computes the combine,
+    the old-params join, AND the untouched carry-through in the same pass.
 
     Arrow-native (mapInArrow): the list<float32> columns flatten zero-copy
     into contiguous matrices and the output is rebuilt as one ListArray —
@@ -221,50 +296,15 @@ def _combine_epoch(
         if not bl:
             return
         tbl = pa.Table.from_batches(bl)
-        nrows = tbl.num_rows
-        if nrows == 0:
+        if tbl.num_rows == 0:
             return
-        ids = tbl.column("node_id").to_numpy()
-        side = tbl.column("side").to_numpy()
-        oldf = tbl.column("_old").to_numpy()
-        # group key (node, side); secondary sort: old row FIRST in its group
-        key = ids * 2 + side
-        order = np.lexsort((1 - oldf, key))
-        key_s = key[order]
-        uniq, starts, counts = np.unique(key_s, return_index=True, return_counts=True)
-        n = (counts - 1).astype(np.float64)  # TRAINED shard copies per (node, side)
-        touched = n > 0
-
-        # ONE segment-sum over the packed [vec | state_half | bias] matrix,
-        # then delta-sum for the array body and the trained-copy mean for
-        # the bias column. Reorder in float32 (half the temp
-        # bytes), accumulate in float64 via reduceat's dtype — bit-identical
-        # to casting up front, since each element upcasts exactly.
-        mat = _flat_f32(tbl, "blob", nrows)[order]
-        dim_ = mat.shape[1] - 1 - (hw + tail)
-        total = np.add.reduceat(mat, starts, axis=0, dtype=np.float64)
-        old = mat[starts].astype(np.float64)
-        csum = total - old
-        out = csum + (1.0 - n)[:, None] * old
-        out[touched, -1] = csum[touched, -1] / n[touched]
-        bias = out[:, -1]
-        body = out[:, :-1].astype(np.float32)
-
-        # every node contributes BOTH old side rows, so (node,0)/(node,1)
-        # groups alternate: even positions are focus halves, odd context
-        vec = body[:, :dim_]
-        sth = body[:, dim_:]
-        sf, sc = sth[0::2], sth[1::2]
-        state_full = np.hstack([sf[:, :hw], sc[:, :hw], sf[:, hw:], sc[:, hw:]])
-        yield pa.record_batch(
-            {
-                "node_id": pa.array(uniq[0::2] >> 1, type=pa.int64()),
-                "focus": _f32_list(vec[0::2]),
-                "context": _f32_list(vec[1::2]),
-                "f_bias": pa.array(bias[0::2], type=pa.float64()),
-                "c_bias": pa.array(bias[1::2], type=pa.float64()),
-                "state": _f32_list(np.ascontiguousarray(state_full)),
-            }
+        yield _combine_sides(
+            tbl.column("node_id").to_numpy(),
+            tbl.column("side").to_numpy(),
+            tbl.column("_old").to_numpy(),
+            _flat_f32(tbl, "blob", tbl.num_rows),
+            hw,
+            tail,
         )
 
     return unioned.mapInArrow(gen, PARAMS_SCHEMA)
@@ -383,6 +423,16 @@ def _make_train_fn(dim: int, method: str, cost: str, max_x: float, iteration: in
     return train_fn
 
 
+def _grid_size(n_shards: int) -> int:
+    """G, the side of the G x G shard grid (_grid_blocks)."""
+    return max(1, round(n_shards ** 0.5))
+
+
+def _order_key(seed: int, iteration: int):
+    """The epoch's within-shard order key `_ord` (module docstring, step 1)."""
+    return F.xxhash64("j", "i", F.lit(seed * 31 + iteration)).alias("_ord")
+
+
 def _grid_blocks(seed: int, n_shards: int):
     """The run's grid sharding, defined once for preshard_cooc and the
     param shipping in train_epoch -> (grid, row_h, col_h, label).
@@ -404,7 +454,7 @@ def _grid_blocks(seed: int, n_shards: int):
     balanced) with several empty tasks. The label map makes
     shard->partition a bijection; grouping content (and therefore kernel
     output) is unchanged."""
-    grid = max(1, round(n_shards ** 0.5))
+    grid = _grid_size(n_shards)
     # labels are mined for the LONG hash — a bare F.lit(int) would make an
     # IntegerType array and route by hashInt, voiding the bijection
     lab_arr = F.array(*[F.lit(int(v)).cast("long") for v in collision_free_labels(grid * grid)])
@@ -458,8 +508,7 @@ def train_epoch(
     # projection over the persisted sharded relation keeps its partition
     # layout (HashPartitioning(shard, n_shards)), so the cogroup below
     # reads the cache with NO exchange on this side.
-    _ord = F.xxhash64("j", "i", F.lit(seed * 31 + iteration)).alias("_ord")
-    sharded = cooc.select("i", "j", "x", "shard", _ord)
+    sharded = cooc.select("i", "j", "x", "shard", _order_key(seed, iteration))
     hw, tail = _side_layout(method, dim)
     # SIDE-SPLIT DIRECT param shipping: a shard in a node's grid ROW trains
     # only its focus half, so only (focus, f_bias, f-state) ships to the G
@@ -515,6 +564,117 @@ def train_epoch(
     out = raw.observe(obs, F.sum("cost").alias("cost"))
     copies = out.filter(F.col("node_id") >= 0).select("node_id", "side", "blob")
     return _combine_epoch(copies, params, hw, tail, n_shards), obs
+
+
+# Driver bytes above which optimize keeps the grid transport: the side
+# table an epoch broadcasts plus the trained copies it collects back
+# (_broadcast_node_bytes per node). The BCA stage makes the same
+# size-based choice (bca/cooc._BROADCAST_EDGE_LIMIT).
+_BROADCAST_PARAMS_LIMIT = 64 << 20
+
+
+def _broadcast_node_bytes(dim: int, method: str, n_shards: int) -> int:
+    """Driver bytes one vocabulary node costs a broadcast epoch: its two
+    packed side blobs, 2·(dim+hw+tail+1)·4 B, plus at most G trained copies
+    of each collected back (a side trains in at most its G grid row/column
+    shards)."""
+    hw, tail = _side_layout(method, dim)
+    return 2 * (dim + hw + tail + 1) * 4 * (1 + _grid_size(n_shards))
+
+
+def _side_arrays(params, hw: int, tail: int):
+    """PARAMS_SCHEMA Arrow table sorted by node_id -> (node_id, side, blob
+    matrix) of its packed side rows, focus then context per node — the
+    numpy twin of _packed_side_blobs (the bias cast to float32 rounds
+    exactly as Spark's cast does)."""
+    n = params.num_rows
+    state = _flat_f32(params, "state", n)
+
+    def side(vec: str, half: np.ndarray, bias: str) -> np.ndarray:
+        b = params.column(bias).to_numpy().astype(np.float32)
+        return np.hstack([_flat_f32(params, vec, n), state[:, half], b[:, None]])
+
+    blob = np.stack(
+        [
+            side("focus", np.r_[0:hw, 2 * hw:2 * hw + tail], "f_bias"),
+            side("context", np.r_[hw:2 * hw, 2 * hw + tail:2 * hw + 2 * tail], "c_bias"),
+        ],
+        axis=1,
+    ).reshape(2 * n, -1)
+    ids = params.column("node_id").to_numpy()
+    return np.repeat(ids, 2), np.tile(np.array([0, 1], np.int32), n), blob
+
+
+def _broadcast_train(
+    cooc: DataFrame,
+    sides,
+    *,
+    dim: int,
+    method: str,
+    cost: str,
+    max_x: float,
+    iteration: int,
+    seed: int,
+    batch: int,
+) -> DataFrame:
+    """The broadcast epoch's one Spark stage: a mapInArrow over the
+    presharded cooc cache (no exchange) whose task trains every shard it
+    holds — exactly one under the collision-free labels — with the grid
+    path's kernel against the broadcast side table `sides`, and emits the
+    same copies + cost row (_OUT_SCHEMA)."""
+    train_fn = _make_train_fn(dim, method, cost, max_x, iteration, batch)
+
+    def run(batches):
+        import pyarrow as pa
+
+        bl = list(batches)
+        if not bl:
+            return
+        tbl = pa.Table.from_batches(bl)
+        shard = tbl.column("shard").to_numpy()
+        for s in np.unique(shard):
+            yield from train_fn(tbl.filter(pa.array(shard == s)), sides.value).to_batches()
+
+    return cooc.select("i", "j", "x", "shard", _order_key(seed, iteration)).mapInArrow(
+        run, _OUT_SCHEMA
+    )
+
+
+def _broadcast_epoch(cooc: DataFrame, params, *, dim: int, method: str, **kw):
+    """One epoch of the broadcast transport (module docstring) -> (new
+    params Arrow table sorted by node_id, summed shard cost). `params` is
+    the pre-epoch PARAMS_SCHEMA table, sorted by node_id; `cooc` the
+    presharded cache; `kw` the rest of _broadcast_train's arguments. The
+    driver runs the grid path's combine on the pre-epoch sides + the
+    copies the stage returns."""
+    import pyarrow as pa
+
+    hw, tail = _side_layout(method, dim)
+    ids, side, blob = _side_arrays(params, hw, tail)
+    sides = cooc.sparkSession.sparkContext.broadcast(
+        pa.table({
+            "node_id": pa.array(ids, type=pa.int64()),
+            "side": pa.array(side, type=pa.int32()),
+            "blob": _f32_list(blob),
+        })
+    )
+    try:
+        out = _broadcast_train(cooc, sides, dim=dim, method=method, **kw).toArrow()
+    finally:
+        sides.destroy()
+    total_cost = float(np.sum(out.column("cost").to_numpy()))
+    keep = out.column("node_id").to_numpy() >= 0  # drop the cost rows
+    copies = out.filter(pa.array(keep))
+    n = copies.num_rows
+    new = _combine_sides(
+        np.concatenate([ids, copies.column("node_id").to_numpy()]),
+        np.concatenate([side, copies.column("side").to_numpy()]),
+        np.concatenate([np.ones(len(ids), np.int64), np.zeros(n, np.int64)]),
+        np.vstack([blob, _flat_f32(copies, "blob", n).reshape(n, blob.shape[1])]),
+        hw,
+        tail,
+    )
+    return pa.Table.from_batches([new]), total_cost
 
 
 @contextmanager
@@ -622,7 +782,11 @@ def optimize(
 ) -> TrainResult:
     """Epoch loop (Optimizer.java:67-120 analog): shuffle -> shard-train ->
     average -> cost/tolerance check. Pass checkpoint_dir to write params per
-    epoch (parquet) — `resume_params` reloads them for mid-run resume."""
+    epoch (parquet) — `resume_params` reloads them for mid-run resume. The
+    transport (broadcast or grid, module docstring) is picked once per run
+    from the vocabulary size; both give the same params and cost history."""
+    import pyarrow as pa
+
     spark = cooc.sparkSession
     if cost == "pglove":
         # boundary artifacts of LEGITIMATE inputs fall outside the logit
@@ -653,15 +817,27 @@ def optimize(
                     ignore_errors=True,
                 )
     params = start_params if start_params is not None else init_params_df(nodes, dim, seed, method)
-    # stable hash-partitioning on node_id, maintained across epochs: the
-    # per-epoch touched-params join and the combine-result join then only
-    # shuffle their small side (params is the big side at real vocab sizes)
-    pp = max(8, spark.sparkContext.defaultParallelism)
-    params = params.repartition(pp, "node_id").persist()
-    params.count()  # materialize init once
+    # transport (module docstring): the broadcast path keeps the params as
+    # one Arrow table on the driver, the grid path as a persisted relation.
+    # The vocabulary is probed like BCA's edge list: at most `cap` node ids
+    # fit the limit, and reading cap + 1 of them both sizes it and, for a
+    # fresh run, gives the ids to initialize (a pure function of the ids:
+    # no Python stage). An empty vocabulary has no side matrix to broadcast.
+    cap = _BROADCAST_PARAMS_LIMIT // _broadcast_node_bytes(dim, method, n_shards)
+    ids = nodes.select("node_id").limit(cap + 1).toArrow().column(0).to_numpy()
+    table = None
+    if 0 < len(ids) <= cap:
+        table = (
+            start_params.toArrow().sort_by("node_id")
+            if start_params is not None
+            else pa.Table.from_batches([_init_batch(np.sort(ids), dim, seed, method)])
+        )
+    else:
+        params = params.persist()
+        params.count()  # materialize init once
 
     # shard the cooc ONCE for the run (fixed block membership; per-epoch
-    # order re-draw happens inside train_epoch) — removes the epoch's
+    # order re-draw happens inside the epoch) — removes the epoch's
     # biggest input shuffle from every iteration
     presharded_here = "shard" not in cooc.columns
     if presharded_here:
@@ -678,24 +854,31 @@ def optimize(
     # static plan (restored on exit)
     with static_epoch_plan(spark):
         for it in range(start_epoch, maxiter):
-            # fused single-job epoch: the cost is collected by an observe()
-            # node DURING the checkpoint materialization below — no shard-
-            # output cache, no separate aggregation pass
-            new_params, obs = train_epoch(
-                cooc, params, dim=dim, method=method, cost=cost, max_x=max_x,
-                iteration=it, seed=seed, n_shards=n_shards, batch=batch,
-            )
-            # truncate lineage each epoch; optionally durable checkpoint
-            if checkpoint_dir is not None:
-                path = f"{checkpoint_dir}/params_epoch={it:04d}"
-                new_params.write.mode("overwrite").parquet(path)
-                # parquet round-trip loses the hash partitioning — restore it
-                new_params = spark.read.parquet(path).repartition(pp, "node_id")
+            path = None if checkpoint_dir is None else f"{checkpoint_dir}/params_epoch={it:04d}"
+            if table is not None:
+                table, total_cost = _broadcast_epoch(
+                    cooc, table, dim=dim, method=method, cost=cost, max_x=max_x,
+                    iteration=it, seed=seed, batch=batch,
+                )
+                if path is not None:
+                    spark.createDataFrame(table, PARAMS_SCHEMA).write.mode("overwrite").parquet(path)
             else:
-                new_params = new_params.localCheckpoint(eager=True)
-            total_cost = float(obs.get["cost"] or 0.0)
-            params.unpersist()
-            params = new_params.persist()
+                # fused single-job epoch: the cost is collected by an
+                # observe() node DURING the checkpoint materialization below
+                # — no shard-output cache, no separate aggregation pass
+                new_params, obs = train_epoch(
+                    cooc, params, dim=dim, method=method, cost=cost, max_x=max_x,
+                    iteration=it, seed=seed, n_shards=n_shards, batch=batch,
+                )
+                # truncate lineage each epoch; optionally durable checkpoint
+                if path is not None:
+                    new_params.write.mode("overwrite").parquet(path)
+                    new_params = resume_params(spark, checkpoint_dir, it)
+                else:
+                    new_params = new_params.localCheckpoint(eager=True)
+                total_cost = float(obs.get["cost"] or 0.0)
+                params.unpersist()
+                params = new_params.persist()
 
             epoch_cost = total_cost / max(co_count, 1)
             history.append(epoch_cost)
@@ -713,6 +896,12 @@ def optimize(
                 break
     if presharded_here:
         cooc.unpersist()
+    if table is not None and history:
+        params = (
+            resume_params(spark, checkpoint_dir, epochs - 1)
+            if checkpoint_dir is not None
+            else spark.createDataFrame(table, PARAMS_SCHEMA)
+        )
     if not converged and history:
         # ran to maxiter without the tolerance break: the honest final cost
         # is the last epoch's, not the 0.0 placeholder
@@ -741,7 +930,8 @@ def converged_epoch(checkpoint_dir: str) -> int | None:
 
 
 def resume_params(spark, checkpoint_dir: str, epoch: int) -> DataFrame:
-    return spark.read.parquet(f"{checkpoint_dir}/params_epoch={epoch:04d}")
+    # the declared schema spares a schema-inference job per read
+    return spark.read.schema(PARAMS_SCHEMA).parquet(f"{checkpoint_dir}/params_epoch={epoch:04d}")
 
 
 def find_completed_epochs(checkpoint_dir: str) -> list[int]:

@@ -29,13 +29,27 @@ _EXT_TO_FMT = {
 }
 
 
+# Serializations Jena reads that this reader does not: named in the error
+# instead of a generic autodetect / unknown-format message
+_UNSUPPORTED = {"jsonld": "JSON-LD", "n3": "N3", "trix": "TriX"}
+_SUPPORTED = "ntriples/turtle/rdfxml/hdt"
+
+
+def _unsupported(name: str, what: str) -> ValueError:
+    return ValueError(
+        f"{_UNSUPPORTED[name]} is not supported ({what}); supported formats: "
+        f"{_SUPPORTED} (extensions {'/'.join(_EXT_TO_FMT)})"
+    )
+
+
 def detect_format(path: str) -> str:
     ext = os.path.splitext(path.rstrip("/"))[1].lower()
     if ext in _EXT_TO_FMT:
         return _EXT_TO_FMT[ext]
+    if ext[1:] in _UNSUPPORTED:
+        raise _unsupported(ext[1:], repr(path))
     raise ValueError(
-        f"cannot autodetect RDF format of {path!r}; pass fmt= one of "
-        "ntriples/turtle/rdfxml/hdt"
+        f"cannot autodetect RDF format of {path!r}; pass fmt= one of {_SUPPORTED}"
     )
 
 
@@ -57,4 +71,6 @@ def read_rdf(spark, path: str, fmt: str | None = None) -> DataFrame:
         from .hdt import read_hdt
 
         return read_hdt(spark, path)
-    raise ValueError(f"unknown RDF format {fmt!r}")
+    if fmt in _UNSUPPORTED:
+        raise _unsupported(fmt, f"fmt={fmt!r}")
+    raise ValueError(f"unknown RDF format {fmt!r}; supported formats: {_SUPPORTED}")

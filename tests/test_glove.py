@@ -179,6 +179,19 @@ def _tiny_cooc(spark):
     return cooc, nodes
 
 
+# optimize's two parameter transports (train.py module docstring), forced
+# through the size limit: 0 sends every vocabulary down the grid path
+TRANSPORT_LIMITS = {"broadcast": 1 << 30, "grid": 0}
+
+
+@pytest.fixture(params=sorted(TRANSPORT_LIMITS))
+def transport(request, monkeypatch):
+    from graph_embeddings_spark.glove import train
+
+    monkeypatch.setattr(train, "_BROADCAST_PARAMS_LIMIT", TRANSPORT_LIMITS[request.param])
+    return request.param
+
+
 def test_optimize_cost_decreases(spark):
     cooc, nodes = _tiny_cooc(spark)
     res = optimize(
@@ -259,10 +272,11 @@ def test_checkpoint_resume(spark, tmp_path):
     assert a == b
 
 
-def test_find_completed_epochs_and_midrun_resume(spark, tmp_path):
+def test_find_completed_epochs_and_midrun_resume(spark, tmp_path, transport):
     """A 2-epoch run resumed for 2 more must equal an uninterrupted 4-epoch
     run (same seed: the per-epoch shuffle key is seed+iteration, so the
-    resumed epochs replay the identical permutations)."""
+    resumed epochs replay the identical permutations), on either
+    transport."""
     from graph_embeddings_spark.glove.train import find_completed_epochs, resume_params
 
     cooc, nodes = _tiny_cooc(spark)
@@ -347,11 +361,11 @@ def test_combine_epoch_matches_hand_values(spark):
     assert np.allclose(got[2]["state"], [22.0] * 6)
 
 
-def test_missing_param_node_fails_loudly(spark):
+def test_missing_param_node_fails_loudly(spark, monkeypatch):
     """A cooc endpoint absent from params (or a preshard built under a
     different seed/n_shards than the param shipping) must raise, not
     silently train a neighbouring node's row through the vectorized
-    searchsorted mapping."""
+    searchsorted mapping — on the grid epoch and on the broadcast one."""
     cooc, _ = _tiny_cooc(spark)  # touches node ids 0..3
     nodes = spark.createDataFrame([(0,), (1,), (2,)], "node_id long")  # 3 missing
     params = init_params_df(nodes, 4, 42, "adagrad")
@@ -363,11 +377,17 @@ def test_missing_param_node_fails_loudly(spark):
         )
         new_params.collect()
     assert "missing from shipped params" in str(exc.value)
+    from graph_embeddings_spark.glove import train
+
+    monkeypatch.setattr(train, "_BROADCAST_PARAMS_LIMIT", TRANSPORT_LIMITS["broadcast"])
+    with pytest.raises(Exception, match="missing from shipped params"):
+        optimize(cooc, nodes, dim=4, co_count=8, max_x=3.0, maxiter=1, seed=42, n_shards=2)
 
 
-def test_convergence_marker_and_final_cost(spark, tmp_path):
+def test_convergence_marker_and_final_cost(spark, tmp_path, transport):
     """A tolerance break writes _CONVERGED; a maxiter run reports the last
-    epoch's cost as final_cost instead of the 0.0 placeholder."""
+    epoch's cost as final_cost instead of the 0.0 placeholder — on either
+    transport."""
     from graph_embeddings_spark.glove.train import converged_epoch, optimize
 
     cooc, nodes = _tiny_cooc(spark)
@@ -431,3 +451,58 @@ def test_retrain_clears_stale_convergence_state(spark, tmp_path):
     left = find_completed_epochs(ckpt)
     assert max(left) == 0  # run A's higher epochs were purged
     assert os.path.isdir(os.path.join(ckpt, "params_epoch=0000"))
+
+
+def _rand_cooc(spark, n_nodes=60, entries=600):
+    """Random cooc with x in (0, 1), valid for both costs, over n_nodes + 3
+    nodes (the last 3 untouched)."""
+    rng = np.random.default_rng(11)
+    pairs = {
+        (int(i), int(j)): float(x)
+        for i, j, x in zip(
+            rng.integers(0, n_nodes, entries), rng.integers(0, n_nodes, entries),
+            rng.uniform(0.05, 0.95, entries),
+        )
+    }
+    cooc = spark.createDataFrame(
+        [(i, j, x) for (i, j), x in sorted(pairs.items())], "i long, j long, x double"
+    )
+    nodes = spark.range(n_nodes + 3).select(F.col("id").alias("node_id"))
+    return cooc, nodes, len(pairs)
+
+
+@pytest.mark.parametrize(
+    "method,cost", [("adagrad", "glove"), ("adam", "glove"), ("adagrad", "pglove")]
+)
+def test_transports_agree(spark, monkeypatch, method, cost):
+    """The broadcast and grid transports run the same kernel and combine,
+    so they give the same cost history and embeddings; each forced run
+    takes only its own epoch path."""
+    from graph_embeddings_spark.glove import train
+
+    def counted(fn, key):
+        def wrapper(*a, **k):
+            calls[key] += 1
+            return fn(*a, **k)
+        return wrapper
+
+    cooc, nodes, co_count = _rand_cooc(spark)
+    got = {}
+    for name, limit in TRANSPORT_LIMITS.items():
+        calls = {"broadcast": 0, "grid": 0}
+        monkeypatch.setattr(train, "_BROADCAST_PARAMS_LIMIT", limit)
+        monkeypatch.setattr(train, "_broadcast_epoch", counted(train._broadcast_epoch, "broadcast"))
+        monkeypatch.setattr(train, "train_epoch", counted(train.train_epoch, "grid"))
+        res = optimize(
+            cooc, nodes, dim=6, co_count=co_count, max_x=1.0, cost=cost, method=method,
+            maxiter=3, tolerance=0.0, seed=5, n_shards=4, batch=32,
+        )
+        monkeypatch.undo()
+        assert calls == {k: 3 if k == name else 0 for k in calls}
+        vecs = {r["node_id"]: np.array(r["vec"]) for r in extract_embeddings(res.params).collect()}
+        got[name] = (res.cost_history, vecs)
+    (h_b, v_b), (h_g, v_g) = got["broadcast"], got["grid"]
+    assert h_b == pytest.approx(h_g, rel=1e-9, abs=0.0)
+    assert set(v_b) == set(v_g) and len(v_b) == 63
+    for k in v_b:
+        np.testing.assert_allclose(v_b[k], v_g[k], rtol=0, atol=1e-6)

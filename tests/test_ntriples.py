@@ -155,3 +155,27 @@ def test_nquads_graph_term_dropped(spark, tmp_path):
         ("http://ex/s3", "http://ex/p", "_:b3", 1),
     }
     assert parse_errors(spark.read.text(str(path))).count() == 0
+
+
+@pytest.mark.parametrize(
+    "path,fmt,name",
+    [
+        ("graph.jsonld", None, "JSON-LD"),
+        ("graph.n3", None, "N3"),
+        ("graph.trix", None, "TriX"),
+        ("graph.data", "jsonld", "JSON-LD"),
+        ("graph.data", "n3", "N3"),
+        ("graph.data", "trix", "TriX"),
+    ],
+)
+def test_unsupported_rdf_format_named(spark, path, fmt, name):
+    """JSON-LD, N3 and TriX (which Jena reads) fail loudly with the
+    format's name and the supported list, by extension or by fmt=."""
+    from graph_embeddings_spark.sources.reader import detect_format, read_rdf
+
+    with pytest.raises(ValueError, match=name) as exc:
+        read_rdf(spark, path, fmt=fmt)
+    assert "ntriples/turtle/rdfxml/hdt" in str(exc.value)
+    if fmt is None:
+        with pytest.raises(ValueError, match=name):
+            detect_format(path)

@@ -85,6 +85,26 @@ def test_extract_embeddings_no_python(spark):
     plan = _optimized(emb)
     assert "zip_with" in plan or "ZipWith" in plan
 
+
+def test_grid_params_not_reshuffled_on_node_id(spark, tmp_path, monkeypatch):
+    """On the grid transport the trained params are read back from the
+    epoch checkpoint as they are: both consumers (the side shipping and
+    the combine) shuffle for themselves, so a node_id repartition of the
+    params would be a shuffle nobody reads."""
+    from graph_embeddings_spark.glove import train
+
+    monkeypatch.setattr(train, "_BROADCAST_PARAMS_LIMIT", 0, raising=False)
+    cooc = spark.createDataFrame(
+        [(0, 1, 2.0), (1, 2, 1.0), (2, 0, 3.0)], "i long, j long, x double"
+    )
+    nodes = spark.range(3).select(F.col("id").alias("node_id"))
+    res = train.optimize(
+        cooc, nodes, dim=4, co_count=3, max_x=3.0, maxiter=2, tolerance=0.0,
+        seed=42, n_shards=4, batch=8, checkpoint_dir=str(tmp_path / "params"),
+    )
+    assert "Exchange hashpartitioning(node_id" not in _plan(res.params)
+
+
 def test_bca_loop_round_exchange_budget(spark):
     """One loop round = frontier⋈adjacency + single node-keyed merge. The
     adjacency is pre-partitioned on the join key and the merge repartitions

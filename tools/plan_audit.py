@@ -29,7 +29,9 @@ def summarize(plan: str) -> dict:
         "exchanges": len(re.findall(r"Exchange", plan)),
         "broadcast_joins": len(re.findall(r"BroadcastHashJoin", plan)),
         "smj": len(re.findall(r"SortMergeJoin", plan)),
-        "python_evals": len(re.findall(r"EvalPython|MapInPandas|FlatMapCoGroupsInPandas", plan)),
+        "python_evals": len(re.findall(
+            r"EvalPython|MapInPandas|MapInArrow|FlatMapCoGroupsIn(?:Pandas|Arrow)", plan
+        )),
         "codegen_stages": len(set(re.findall(r"\*\((\d+)\)", plan))),
     }
 
@@ -121,11 +123,12 @@ def main():
         "signature computation never leaves codegen.",
     )
 
-    # 6. GloVe epoch — the optimize() path: presharded cooc cache (no
-    # cooc-side exchange in the epoch), side-split direct param shipping,
-    # fused single-job epoch (Observation cost), Arrow combine
+    # 6. GloVe epoch — both optimize() transports over one presharded cooc
+    # cache: the grid epoch (side-split direct param shipping, fused
+    # single-job epoch with an Observation cost, Arrow combine) and the
+    # broadcast epoch (one mapInArrow, params broadcast from the driver)
     from graph_embeddings_spark.glove.train import (
-        init_params_df, preshard_cooc, train_epoch,
+        _broadcast_train, init_params_df, preshard_cooc, train_epoch,
     )
 
     cooc = preshard_cooc(
@@ -135,12 +138,10 @@ def main():
     cooc.count()
     nodes = spark.range(3).select(F.col("id").alias("node_id"))
     params = init_params_df(nodes, 4, 42, "adagrad")
-    new_params, _obs = train_epoch(
-        cooc, params, dim=4, method="adagrad", cost="glove", max_x=2.0,
-        iteration=0, seed=42, n_shards=4, batch=64,
-    )
+    epoch = dict(dim=4, method="adagrad", cost="glove", max_x=2.0, iteration=0, seed=42, batch=64)
+    new_params, _obs = train_epoch(cooc, params, n_shards=4, **epoch)
     add(
-        "GloVe epoch (presharded cogroup train + Arrow combine, one job)",
+        "GloVe epoch, grid transport (presharded cogroup train + Arrow combine, one job)",
         new_params,
         "cooc side reads the fixed-shard CACHE (no exchange); each param "
         "HALF ships straight to its grid row/column shards "
@@ -149,6 +150,19 @@ def main():
         "segment-sum combine; cost rides an observe() node in the same "
         "job — params never pass through the driver.",
     )
+    sides = spark.sparkContext.broadcast(None)  # planning only: never read
+    add(
+        "GloVe epoch, broadcast transport (one mapInArrow stage)",
+        _broadcast_train(cooc, sides, **epoch),
+        "The vocabularies whose side table fits _BROADCAST_PARAMS_LIMIT: ONE "
+        "MapInArrow straight over the InMemoryTableScan of the fixed-shard "
+        "cache, no exchange in the epoch (the counted ones are the cache's "
+        "own preshard repartition, final and initial plan, built once per "
+        "run; the grid entry counts them too). Each task trains its shard "
+        "with the grid path's kernel against the broadcast side table; the "
+        "driver collects the copies with toArrow() and runs the same combine.",
+    )
+    sides.destroy()
     cooc.unpersist()
 
     # 7. MinHash-LSH dedup full query (round-2 restructure)
