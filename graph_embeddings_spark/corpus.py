@@ -423,7 +423,3 @@ def alias_dict_df(spark, world: World):
             rows.append((alias, world.entity_ids[idx], float(prior)))
     return spark.createDataFrame(rows, "alias string, entity_id string, prior double")
 
-
-def entities_df(spark, world: World):
-    rows = list(zip(world.entity_ids, world.names, world.etypes))
-    return spark.createDataFrame(rows, "entity_id string, name string, etype string")

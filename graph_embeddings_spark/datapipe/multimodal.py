@@ -35,24 +35,13 @@ MEDIA_SCHEMA = (
     "meta struct<width:int, height:int, sample_rate:int, n_frames:int>"
 )
 
-def _decode_image_stub(payload: bytes, width: int, height: int) -> np.ndarray:
-    """Deterministic fake decode for non-BMP/JPEG payloads: bytes ->
-    (h, w) uint8 grid by repeating the payload. The real formats this
-    corpus produces (BMP, baseline JPEG) never reach this stub — they
-    decode through the from-spec codecs in bmp.py / jpeg.py via
-    _decode_image below."""
-    if not payload or width <= 0 or height <= 0:
-        return np.zeros((0, 0), dtype=np.uint8)
-    buf = np.frombuffer(bytes(payload), dtype=np.uint8)
-    reps = int(np.ceil(width * height / max(len(buf), 1)))
-    return np.tile(buf, reps)[: width * height].reshape(height, width)
-
-
-def _decode_image(payload: bytes, width: int, height: int) -> np.ndarray:
+def _decode_image(payload: bytes, width: int, height: int) -> np.ndarray | None:
     """Image decode dispatch: real BMP codec for BMP payloads (8/24-bpp
     uncompressed), real baseline-JPEG codec for JPEG payloads (from-scratch
-    DCT/Huffman decode in datapipe/jpeg.py, luma plane), deterministic stub
-    for anything else (no PIL in this sandbox)."""
+    DCT/Huffman decode in datapipe/jpeg.py, luma plane); both read their
+    dimensions from the payload, not from the declared width/height. Any
+    other payload has no codec here (the package does not depend on PIL):
+    None, never pixels made up from the bytes."""
     from .bmp import decode_bmp, is_bmp
     from .jpeg import decode_jpeg_gray, is_jpeg
 
@@ -61,7 +50,7 @@ def _decode_image(payload: bytes, width: int, height: int) -> np.ndarray:
         return decode_bmp(payload)
     if is_jpeg(payload):
         return decode_jpeg_gray(payload)
-    return _decode_image_stub(payload, width, height)
+    return None
 
 
 def _decode_audio(payload: bytes, sample_rate: int) -> tuple[np.ndarray, int]:
@@ -133,17 +122,22 @@ def synthetic_media_df(spark, n: int, seed: int = 42, partitions: int = 4) -> Da
 
 def image_features(media: DataFrame, n_bins: int = 16) -> DataFrame:
     """images -> (media_id, feat array<float>): intensity histogram of the
-    decoded grid (REAL decode for BMP payloads). Arrow-batched; per-batch
-    numpy, no per-row Python at the Spark layer."""
+    decoded grid (REAL decode for BMP and JPEG payloads). A payload no codec
+    reads keeps its row with a NULL feat, so the drops are counted by
+    `feat IS NULL` rather than vanishing. Arrow-batched; per-batch numpy,
+    no per-row Python at the Spark layer."""
 
     def extract(batches):
         for pdf in batches:
             ids, feats = [], []
             for mid, payload, meta in zip(pdf["media_id"], pdf["payload"], pdf["meta"]):
                 img = _decode_image(payload, int(meta["width"]), int(meta["height"]))
+                ids.append(int(mid))
+                if img is None:
+                    feats.append(None)
+                    continue
                 hist, _ = np.histogram(img, bins=n_bins, range=(0, 256))
                 total = hist.sum() or 1
-                ids.append(int(mid))
                 feats.append((hist / total).astype(np.float32))
             yield pd.DataFrame({"media_id": ids, "feat": feats})
 
@@ -193,14 +187,17 @@ def audio_features(media: DataFrame, n_bands: int = 8) -> DataFrame:
 
 def resize_images(media: DataFrame, out_w: int = 4, out_h: int = 4) -> DataFrame:
     """images -> (media_id, resized binary): nearest-neighbor downsample of
-    the decoded grid, re-encoded as raw bytes (stub for a real resize)."""
+    the decoded grid, re-encoded as raw bytes; NULL where no codec reads
+    the payload (as in image_features)."""
 
     def resize(batches):
         for pdf in batches:
             ids, blobs = [], []
             for mid, payload, meta in zip(pdf["media_id"], pdf["payload"], pdf["meta"]):
                 img = _decode_image(payload, int(meta["width"]), int(meta["height"]))
-                if img.size == 0:
+                if img is None:
+                    out = None
+                elif img.size == 0:
                     out = b""
                 else:
                     ys = np.linspace(0, img.shape[0] - 1, out_h).astype(int)

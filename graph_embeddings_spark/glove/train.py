@@ -36,8 +36,8 @@ same params and cost history up to float64 summation order:
     (Optimizer.java:27-28); an epoch broadcasts the side table, runs ONE
     mapInArrow over the presharded cooc cache (one shard per partition
     via the collision-free labels) with no exchange, pulls the copies back
-    with toArrow() and combines them on the driver. The checkpoint is
-    written through Spark in the grid path's layout.
+    with toArrow() and combines them on the driver. The driver also writes
+    the checkpoint, with pyarrow, in the grid path's layout.
   * grid — bigger vocabularies: train_epoch ships each param HALF straight
     to the G shards of its grid row (focus) or column (context),
     cogroup(cooc_shard, side_rows).applyInArrow runs the kernel, and the
@@ -861,7 +861,7 @@ def optimize(
                     iteration=it, seed=seed, batch=batch,
                 )
                 if path is not None:
-                    spark.createDataFrame(table, PARAMS_SCHEMA).write.mode("overwrite").parquet(path)
+                    _write_params_table(table, path, spark)
             else:
                 # fused single-job epoch: the cost is collected by an
                 # observe() node DURING the checkpoint materialization below
@@ -907,6 +907,28 @@ def optimize(
         # is the last epoch's, not the 0.0 placeholder
         final_cost = history[-1]
     return TrainResult(params=params, cost_history=history, final_cost=final_cost, epochs_run=epochs)
+
+
+def _write_params_table(table, path: str, spark) -> None:
+    """A broadcast epoch's checkpoint, written on the driver (no Spark job)
+    in the files Spark writes for createDataFrame(table): n rows in
+    min(n, leaf parallelism) consecutive slices, the split the PCA's
+    per-partition moment sums read back; `_SUCCESS` last, as the commit
+    find_completed_epochs looks for."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    n = table.num_rows
+    leaf = spark.conf.get("spark.sql.leafNodeDefaultParallelism", None)
+    k = min(max(n, 1), int(leaf or spark.sparkContext.defaultParallelism))
+    for i in range(k):
+        lo, hi = i * n // k, (i + 1) * n // k
+        pq.write_table(table.slice(lo, hi - lo), os.path.join(path, f"part-{i:05d}.parquet"))
+    open(os.path.join(path, "_SUCCESS"), "w").close()
 
 
 def mark_converged(checkpoint_dir: str, epoch: int, final_cost: float) -> None:

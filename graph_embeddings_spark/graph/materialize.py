@@ -18,17 +18,17 @@ Reference semantics preserved exactly:
   * J2 similarity edges: each accepted pair adds TWO directed edges with
     weight=similarity and etype=0 (Rdf2GrphConverter.java:158-173).
 
-Scale notes: the node dictionary is built with a groupBy + row_number over a
-global sort — an explicit, deliberate exchange (SURVEY.md §4.4). The
-weights/edge-type dictionaries are tiny and broadcast. Edge id resolution is
-two joins against the node dictionary; at 10^12-triple scale those joins
-shuffle on (label) / (pred,label), the natural keys, and AQE handles skewed
-labels (hub entities) — plus an optional salt knob on the dictionary join.
+Scale notes: the node dictionary is a distinct + range sort — explicit,
+deliberate exchanges (SURVEY.md §4.4). The weights dictionary is broadcast;
+the edge-type dictionary is numbered on the driver and inlined as a map
+literal. Edge id resolution is two joins against the node dictionary; at
+10^12-triple scale those joins shuffle on (label) / (pred,label), the
+natural keys, and AQE handles skewed labels (hub entities).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ..config import BLANK, LITERAL, URI
 
@@ -36,12 +36,15 @@ from ..config import BLANK, LITERAL, URI
 OBJ_URI, OBJ_BLANK, OBJ_LITERAL = 0, 1, 2
 
 
-def filter_by_predicate_weights(triples: DataFrame, weights: dict[str, float]) -> DataFrame:
+def filter_by_predicate_weights(triples: DataFrame, weights: dict[str, float] | None) -> DataFrame:
     """F1 — keep only weighted predicates, attach the weight column.
 
     Broadcast join rather than isin() so the weight value rides along and the
-    plan stays a single broadcast hash join at any dictionary size.
+    plan stays a single broadcast hash join at any dictionary size. With no
+    map (None) every predicate is kept at weight 1.0.
     """
+    if weights is None:
+        return triples.withColumn("weight", F.lit(1.0).cast("float"))
     spark = triples.sparkSession
     wdf = spark.createDataFrame(list(weights.items()), "pred string, weight float")
     return triples.join(F.broadcast(wdf), "pred", "inner")
@@ -58,60 +61,54 @@ def node_kind_expr():
     )
 
 
+def observed_predicates(triples: DataFrame) -> list[str]:
+    """Sorted distinct predicates: one aggregate (<= 127 entries, A2)."""
+    return triples.agg(F.sort_array(F.collect_set("pred"))).first()[0]
+
+
+def edge_type_ids(predicates, weights: dict[str, float] | None) -> dict[str, int]:
+    """A2 — predicate -> etype 1..N over the sorted observed predicates that
+    survive the F1 filter; 0 is reserved for similarity edges."""
+    kept = set(predicates) if weights is None else set(predicates) & weights.keys()
+    return {p: i for i, p in enumerate(sorted(kept), 1)}
+
+
+# monotonically_increasing_id() puts the partition index above this bit
+# and the row's index within its partition below it
+_ROW_BITS = 33
+
+
 def assign_consecutive_ids(
     df: DataFrame, order_cols: list, id_col: str = "node_id",
     cache_registry: list | None = None,
 ) -> DataFrame:
     """Deterministic consecutive ids [0, n) in global sort order WITHOUT a
     single-task global window: range-partition on the sort key (parallel
-    sort), number within each partition, then add per-partition offsets
-    (one tiny driver-side cumulative sum). The ids are a pure function of
-    the global sort order — range boundaries only choose split points, so
-    the result is identical at any parallelism (the resumability/stability
-    contract of SURVEY.md §4.4)."""
-    import pandas as pd
-    from pyspark.sql.types import LongType, IntegerType, StructField, StructType
-
-    ranged = df.repartitionByRange(*order_cols).sortWithinPartitions(*order_cols)
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [StructField("_pid", IntegerType()), StructField("_rn", LongType())]
-    )
-
-    def number(pdf_iter):
-        # one mapInPandas invocation == one partition; batches arrive in
-        # partition order, so a running counter numbers the partition
-        # without any extra exchange
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        n = 0
-        for pdf in pdf_iter:
-            pdf = pdf.copy()
-            pdf["_pid"] = pid
-            pdf["_rn"] = pd.RangeIndex(n + 1, n + 1 + len(pdf)).astype("int64")
-            n += len(pdf)
-            yield pdf
-
-    # persisted: consumed twice (per-partition counts, then the id join);
+    sort), number each sorted partition with monotonically_increasing_id(),
+    then add per-partition offsets (one count job, a driver-side cumulative
+    sum). The ids are a pure function of the global sort order — range
+    boundaries only choose split points, so the result is identical at any
+    parallelism (the resumability/stability contract of SURVEY.md §4.4).
+    JVM-only: no Python stage."""
+    # persisted: consumed twice (per-partition counts, then the ids);
     # callers that checkpoint the result pass cache_registry to unpersist it
-    local = ranged.mapInPandas(number, out_schema).persist()
+    local = (
+        df.repartitionByRange(*order_cols).sortWithinPartitions(*order_cols)
+        .withColumn("_mid", F.monotonically_increasing_id())
+        .persist()
+    )
     if cache_registry is not None:
         cache_registry.append(local)
-    counts = {r["_pid"]: r["c"] for r in local.groupBy("_pid").agg(F.count("*").alias("c")).collect()}
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    spark = df.sparkSession
-    odf = F.broadcast(
-        spark.createDataFrame([(p, o) for p, o in offsets.items()], "_pid int, _off long")
-    )
-    return (
-        local.join(odf, "_pid")
-        .withColumn(id_col, F.col("_off") + F.col("_rn") - 1)
-        .drop("_pid", "_rn", "_off")
-    )
+    pid = F.shiftright("_mid", _ROW_BITS)
+    counts = dict(local.groupBy(pid).count().collect())
+    offsets, acc = [], 0
+    for p in range(max(counts, default=0) + 1):
+        offsets.append(F.lit(acc).cast("long"))
+        acc += counts.get(p, 0)
+    row = F.col("_mid").bitwiseAND((1 << _ROW_BITS) - 1)
+    return local.withColumn(
+        id_col, F.element_at(F.array(*offsets), (pid + 1).cast("int")) + row
+    ).drop("_mid")
 
 
 def build_nodes(triples: DataFrame, cache_registry: list | None = None) -> DataFrame:
@@ -140,21 +137,20 @@ def build_nodes(triples: DataFrame, cache_registry: list | None = None) -> DataF
     )
 
 
-def build_edge_types(triples: DataFrame) -> DataFrame:
-    """A2 — etypes(pred string, etype int); 1-based, 0 reserved for similarity."""
-    w = Window.orderBy("pred")
-    return triples.select("pred").distinct().withColumn("etype", F.row_number().over(w))
-
-
 def build_edges(
-    triples_weighted: DataFrame, nodes: DataFrame, etypes: DataFrame
+    triples_weighted: DataFrame, nodes: DataFrame, etypes: dict[str, int]
 ) -> DataFrame:
     """edges(src long, dst long, etype int, weight float).
 
     Two node-dictionary joins: subjects on (label), objects on (label) for
     entities and (label, pred_ctx) for literals — one join with a null-safe
-    pred_ctx condition expresses both.
+    pred_ctx condition expresses both. The etype is a lookup in the
+    driver-side A2 dictionary, inlined as a map literal.
     """
+    etype = F.map_from_arrays(
+        F.array(*map(F.lit, etypes)).cast("array<string>"),
+        F.array(*map(F.lit, etypes.values())).cast("array<int>"),
+    )[F.col("pred")]
     t = triples_weighted.withColumn("obj_type", node_kind_expr()).withColumn(
         "obj_pred_ctx", F.when(F.col("obj_type") == LITERAL, F.col("pred"))
     )
@@ -176,8 +172,10 @@ def build_edges(
             & (t.obj_pred_ctx.eqNullSafe(dst_nodes.obj_pred_ctx)),
             "inner",
         )
-        .join(F.broadcast(etypes), "pred", "inner")
-        .select("src", "dst", "etype", F.col("weight").cast("float").alias("weight"))
+        .select(
+            "src", "dst", etype.alias("etype"),
+            F.col("weight").cast("float").alias("weight"),
+        )
     )
 
 
@@ -192,12 +190,16 @@ def similarity_edges(pairs: DataFrame) -> DataFrame:
 
 
 def materialize_graph(
-    triples: DataFrame, weights: dict[str, float], cache_registry: list | None = None
+    triples: DataFrame, weights: dict[str, float] | None, cache_registry: list | None = None,
+    predicates: list[str] | None = None,
 ):
-    """Full stage: returns (nodes, edges, etypes). triples needs columns
-    (subj, pred, obj, obj_kind)."""
+    """Full stage: returns (nodes, edges, etypes), etypes the A2 dictionary.
+    triples needs columns (subj, pred, obj, obj_kind); a caller that already
+    holds the observed `predicates` spares the aggregate that finds them."""
+    if predicates is None:
+        predicates = observed_predicates(triples)
     weighted = filter_by_predicate_weights(triples, weights)
     nodes = build_nodes(weighted, cache_registry=cache_registry)
-    etypes = build_edge_types(weighted)
+    etypes = edge_type_ids(predicates, weights)
     edges = build_edges(weighted, nodes, etypes)
     return nodes, edges, etypes

@@ -26,13 +26,6 @@ def cosine_expr(va, vb):
     return dot / (_norm_col(va) * _norm_col(vb) + F.lit(1e-12))
 
 
-def pairwise_cosine(emb_a: DataFrame, emb_b: DataFrame) -> DataFrame:
-    """(a, vec) x (b, vec) -> (a, b, cos). Caller bounds the join size."""
-    a = emb_a.select(F.col("node_id").alias("a"), F.col("vec").alias("_va"))
-    b = emb_b.select(F.col("node_id").alias("b"), F.col("vec").alias("_vb"))
-    return a.crossJoin(b).select("a", "b", cosine_expr(F.col("_va"), F.col("_vb")).alias("cos"))
-
-
 def cosine_neighbor_rank(embeddings: DataFrame, pairs: DataFrame) -> DataFrame:
     """pairs(a, b) -> (a, b, rank) where rank = position of b among ALL other
     nodes by cosine to a (1 = nearest). Intended for small probe sets: the

@@ -50,10 +50,6 @@ def filter_embeddings(embeddings: DataFrame, out: OutputConfig) -> DataFrame:
     return embeddings.filter(keep) if keep is not None else embeddings.limit(0)
 
 
-def write_parquet(embeddings: DataFrame, path: str) -> None:
-    embeddings.write.mode("overwrite").parquet(path)
-
-
 def vectors_tsv_lines(embeddings: DataFrame) -> DataFrame:
     """One string column 'line': vector floats %11.6E-joined by tabs
     (EmbeddingTextWriter.java:133-136)."""

@@ -1,29 +1,36 @@
 """End-to-end pipeline driver: web pages -> KG -> co-occurrence -> embeddings.
 
 The Spark analog of Main.runProgram (Main.java:29-78), re-architected per
-BASELINE.json north_rule: every stage writes a parquet/Iceberg checkpoint
-with per-partition lineage rows, so any run resumes from the last completed
-stage (and training resumes mid-epoch via glove.train's per-epoch params
+BASELINE.json north_rule: every stage writes a parquet checkpoint with
+per-file lineage rows, so any run resumes from the last completed stage
+(and training resumes mid-epoch via glove.train's per-epoch params
 checkpoints). Stage seams match the reference's:
 
     load     (JenaReader)        -> dedup'd pages          [graft: web table]
     extract  (graft surface)     -> text per url
-    triples  (graft surface)     -> triples(subj,pred,obj,obj_kind)
-    convert  (Rdf2GrphConverter) -> nodes/edges/etypes
+    triples  (graft surface / RDF source) -> triples(subj,pred,obj,obj_kind)
+    convert  (Rdf2GrphConverter) -> nodes, edges (A2 etypes numbered on the driver)
     compare  (CompareJob loop)   -> similarity type-0 edges
     bca      (BookmarkColoring)  -> cooc(i,j,x) + max
     optimize (Optimizer)         -> params -> embeddings
     write    (EmbeddingTextWriter) -> filtered parquet/TSV
 
+`run_graph_pipeline` checkpoints the `triples` stage for both entry points,
+so every later stage reads parquet and the input is parsed once per run.
+
 Checkpoint layout under `work_dir`:
     <stage>/data/        parquet of the stage output
-    <stage>/_lineage/    (stage, partition_id, rows) rows + _DONE marker
+    <stage>/_lineage/    (partition_id, rows, stage) rows, one per data file,
+                         counted from the files' parquet footers
+    <stage>/_DONE        written last: the stage is complete
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
+import shutil
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -37,7 +44,10 @@ from .glove.train import (
     converged_epoch, extract_embeddings, find_completed_epochs, optimize, resume_params,
 )
 from .graph.canonicalize import all_similarity_pairs
-from .graph.materialize import materialize_graph, similarity_edges
+from .graph.materialize import (
+    build_edges, edge_type_ids, filter_by_predicate_weights, materialize_graph,
+    observed_predicates, similarity_edges,
+)
 from .output import filter_embeddings, write_tsv
 
 
@@ -47,18 +57,28 @@ def _stage_paths(work_dir: str, stage: str) -> tuple[str, str, str]:
 
 
 def checkpoint_stage(df: DataFrame, work_dir: str, stage: str) -> DataFrame:
-    """Write stage output + per-partition lineage (north_rule), return the
-    re-read DF (truncates lineage, makes the stage resumable)."""
-    spark = df.sparkSession
+    """Write stage output + per-file lineage (north_rule), return the
+    re-read DF (truncates lineage, makes the stage resumable). The write is
+    the stage's only job: the re-read takes the DataFrame's own schema (no
+    inference job) and the lineage rows come from the written files'
+    parquet footers, read on the driver."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     data, lineage, done = _stage_paths(work_dir, stage)
     df.write.mode("overwrite").parquet(data)
-    out = spark.read.parquet(data)
-    out.groupBy(F.spark_partition_id().alias("partition_id")).agg(
-        F.count("*").alias("rows")
-    ).withColumn("stage", F.lit(stage)).write.mode("overwrite").parquet(lineage)
+    parts = sorted(f for f in os.listdir(data) if f.endswith(".parquet"))
+    rows = [pq.ParquetFile(os.path.join(data, f)).metadata.num_rows for f in parts]
+    shutil.rmtree(lineage, ignore_errors=True)
+    os.makedirs(lineage)
+    pq.write_table(pa.table({
+        "partition_id": pa.array(range(len(rows)), pa.int32()),
+        "rows": pa.array(rows, pa.int64()),
+        "stage": [stage] * len(rows),
+    }), os.path.join(lineage, "part-00000.parquet"))
     with open(done, "w") as f:
         f.write("ok\n")
-    return out
+    return df.sparkSession.read.schema(df.schema).parquet(data)
 
 
 def stage_done(work_dir: str, stage: str) -> bool:
@@ -132,18 +152,13 @@ def run_pipeline(
 
     pages_ck = _resumable(spark, work_dir, "extract", build_pages, resume)
 
-    # -- triples ------------------------------------------------------------
-    def build_triples():
-        surface = extract_surface_triples(pages_ck, aliases, text_col="text")
-        linked = link_triples(surface, alias_df)
-        return linked.select(
-            "subj", "pred", "obj",
-            F.when(F.col("kind") == "literal", F.lit(2)).otherwise(F.lit(0)).alias("obj_kind"),
-            "url",
-        )
-
-    triples = _resumable(spark, work_dir, "triples", build_triples, resume)
-
+    # -- triples (checkpointed by run_graph_pipeline) ------------------------
+    surface = extract_surface_triples(pages_ck, aliases, text_col="text")
+    triples = link_triples(surface, alias_df).select(
+        "subj", "pred", "obj",
+        F.when(F.col("kind") == "literal", F.lit(2)).otherwise(F.lit(0)).alias("obj_kind"),
+        "url",
+    )
     return run_graph_pipeline(
         spark, triples, config,
         work_dir=work_dir, resume=resume, train=train,
@@ -171,37 +186,36 @@ def run_graph_pipeline(
 
     weights: predicate -> weight (F1). The reference requires an explicit
     map (NPEs without one, Rdf2GrphConverter.java:96); absent one we weight
-    every observed predicate 1.0 — graceful where upstream crashes, and the
+    every predicate 1.0 — graceful where upstream crashes, and the
     predicate dictionary is <= 127 entries by contract (A2)."""
     config.check()
-    _weights_memo = {"w": weights if weights is not None else (config.weights or None)}
-
-    def get_weights() -> dict[str, float]:
-        # lazy: the predicate scan only runs if a stage actually BUILDS
-        # (fully-resumed runs load every stage from checkpoint and never
-        # need the map — don't pay a full triples pass for it)
-        if _weights_memo["w"] is None:
-            _weights_memo["w"] = {
-                r["pred"]: 1.0 for r in triples.select("pred").distinct().collect()
-            }
-        return _weights_memo["w"]
+    # checkpointed once here for both entry points: every later read of the
+    # triples is a parquet scan, not a re-parse of the source
+    source = triples
+    triples = _resumable(spark, work_dir, "triples", lambda: source, resume)
 
     # -- graph materialization (F1/A1/A2) -----------------------------------
+    w = weights if weights is not None else (config.weights or None)
+    # lazy: the one aggregate over the triples that finds the observed
+    # predicates (the etype numbering) runs only if a graph stage actually
+    # BUILDS — a fully-resumed run never needs it
+    predicates = functools.cache(lambda: observed_predicates(triples))
+
     node_caches: list = []
 
     def build_nodes_fn():
-        nodes, edges, _ = materialize_graph(triples, get_weights(), cache_registry=node_caches)
+        nodes, _, _ = materialize_graph(
+            triples, w, cache_registry=node_caches, predicates=predicates(),
+        )
         return nodes
 
     nodes = _resumable(spark, work_dir, "nodes", build_nodes_fn, resume, caches=node_caches)
 
     def build_edges_fn():
-        # rebuild against the checkpointed node dictionary for id stability
-        from .graph.materialize import build_edge_types, build_edges, filter_by_predicate_weights
-
-        weighted = filter_by_predicate_weights(triples, get_weights())
-        etypes = build_edge_types(weighted)
-        return build_edges(weighted, nodes, etypes)
+        # the same weighted triples and A2 dictionary as the nodes, joined
+        # to the checkpointed node ids (also when only edges/ is rebuilt)
+        weighted = filter_by_predicate_weights(triples, w)
+        return build_edges(weighted, nodes, edge_type_ids(predicates(), w))
 
     edges = _resumable(spark, work_dir, "edges", build_edges_fn, resume)
 

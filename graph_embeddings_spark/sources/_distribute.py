@@ -49,16 +49,12 @@ def resolve_iri(iri: str, base: str) -> str:
     return stripped0[: slash + 1] + iri
 
 
-def parse_files_distributed(
-    files: DataFrame,
-    parse_fn,
-    path_col: str = "path",
-    text_col: str = "text",
-) -> DataFrame:
-    """(path, text) rows -> triples DF; one parse_fn(text, bnode_prefix)
-    call per file, Arrow-batched. Anonymous blank-node ids are namespaced
-    by a hash of the file path, so ids never collide across files at any
-    parallelism (deterministic: same input -> same ids)."""
+def read_documents(spark, path: str, parse_fn) -> DataFrame:
+    """Directory/glob of whole-document files -> triples DF; one
+    parse_fn(text, bnode_prefix) call per file (file = task), Arrow-batched.
+    Anonymous blank-node ids are namespaced by a hash of the file path, so
+    ids never collide across files at any parallelism (deterministic: same
+    input -> same ids)."""
     import hashlib
 
     import pandas as pd
@@ -66,7 +62,7 @@ def parse_files_distributed(
     def run(batches):
         for pdf in batches:
             rows = {"subj": [], "pred": [], "obj": [], "obj_kind": []}
-            for path, text in zip(pdf[path_col], pdf[text_col]):
+            for path, text in zip(pdf["path"], pdf["text"]):
                 pfx = hashlib.sha1(str(path).encode()).hexdigest()[:12]
                 for s, p, o, k in parse_fn(text, pfx):
                     rows["subj"].append(s)
@@ -77,14 +73,9 @@ def parse_files_distributed(
             pdf_out["obj_kind"] = pdf_out["obj_kind"].astype("int8")
             yield pdf_out
 
-    return files.mapInPandas(run, TRIPLES_SCHEMA)
-
-
-def read_documents(spark, path: str, parse_fn) -> DataFrame:
-    """Directory/glob of whole-document files -> triples DF (file = task)."""
     files = (
         spark.read.text(path, wholetext=True)
         .select(F.input_file_name().alias("path"), F.col("value").alias("text"))
         .repartition("path")
     )
-    return parse_files_distributed(files, parse_fn)
+    return files.mapInPandas(run, TRIPLES_SCHEMA)

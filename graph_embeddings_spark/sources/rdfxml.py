@@ -174,12 +174,6 @@ def parse_rdfxml_text(text: str, bnode_prefix: str = "g") -> list[tuple[str, str
     return _RdfXmlParser(bnode_prefix).parse(text)
 
 
-def parse_rdfxml_files(files: DataFrame, path_col: str = "path", text_col: str = "text") -> DataFrame:
-    from ._distribute import parse_files_distributed
-
-    return parse_files_distributed(files, parse_rdfxml_text, path_col, text_col)
-
-
 def read_rdfxml(spark, path: str) -> DataFrame:
     from ._distribute import read_documents
 

@@ -472,17 +472,9 @@ class _Parser:
 
 
 def parse_turtle_text(text: str, bnode_prefix: str = "g") -> list[tuple[str, str, str, int]]:
-    """One document -> [(subj, pred, obj, obj_kind)]. Pure function; the
-    mapInPandas wrapper below distributes it per file."""
+    """One document -> [(subj, pred, obj, obj_kind)]. Pure function;
+    read_turtle below distributes it per file."""
     return _Parser(text, bnode_prefix).parse()
-
-
-def parse_turtle_files(files: DataFrame, path_col: str = "path", text_col: str = "text") -> DataFrame:
-    """(path, text) rows -> triples DF; one parse per file, distributed
-    (shared wrapper: sources/_distribute.parse_files_distributed)."""
-    from ._distribute import parse_files_distributed
-
-    return parse_files_distributed(files, parse_turtle_text, path_col, text_col)
 
 
 def read_turtle(spark, path: str) -> DataFrame:

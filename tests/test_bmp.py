@@ -60,6 +60,32 @@ def test_image_features_closed_form_histogram(spark):
     assert np.allclose(got[0]["feat"], want, atol=1e-7)
 
 
+def test_unknown_image_payload_gives_null_features(spark):
+    """A payload that is neither BMP nor JPEG has no codec: its row keeps a
+    NULL feat (and a NULL resize), so the drop is counted, not filled with
+    pixels made up from the payload bytes."""
+    from pyspark.sql import functions as F
+
+    from graph_embeddings_spark.datapipe.multimodal import (
+        MEDIA_SCHEMA, image_features, resize_images,
+    )
+
+    meta = {"width": 8, "height": 8, "sample_rate": 0, "n_frames": 1}
+    bmp = encode_bmp_gray8(np.zeros((8, 8), dtype=np.uint8))
+    rows = [
+        (0, "image", bytearray(bmp), meta),
+        (1, "image", bytearray(b"GIF89a\x08\x00\x08\x00 not decodable here"), meta),
+    ]
+    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
+    feats = image_features(media, n_bins=16)
+    got = {r["media_id"]: r["feat"] for r in feats.collect()}
+    assert got[1] is None
+    assert got[0] is not None and sum(got[0]) == pytest.approx(1.0)
+    assert feats.filter(F.col("feat").isNull()).count() == 1
+    resized = {r["media_id"]: r["resized"] for r in resize_images(media).collect()}
+    assert resized[1] is None and len(resized[0]) == 16
+
+
 def test_synthetic_media_images_are_real_encoded_files(spark):
     """Image rows alternate genuine BMP and baseline-JPEG payloads; both
     decode through their from-scratch codecs to the declared dimensions."""

@@ -133,3 +133,22 @@ def test_bca_loop_round_exchange_budget(spark):
     plan = _plan(moved).split("InMemoryRelation")[0]
     n_exchanges = plan.count("Exchange hashpartitioning")
     assert n_exchanges == 1, plan
+
+
+def test_id_assigner_has_no_python_stage(spark):
+    """The consecutive-id assigner (A1 node dictionary) numbers its
+    range-sorted partitions in the JVM: the plan of its ids, cached
+    numbering included, holds no Python stage."""
+    from graph_embeddings_spark.graph.materialize import assign_consecutive_ids
+
+    df = spark.createDataFrame(
+        [(f"l{i}", i % 3, None if i % 2 else "p") for i in range(50)],
+        "label string, node_type int, pred_ctx string",
+    )
+    out = assign_consecutive_ids(
+        df, [F.col("node_type"), F.col("label"), F.col("pred_ctx").asc_nulls_first()]
+    )
+    plan = _plan(out)
+    assert "InMemoryRelation" in plan  # the cached numbering is shown too
+    for node in ("MapInPandas", "MapInArrow", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan, plan

@@ -80,6 +80,38 @@ def main():
         "Dictionary side broadcast — no shuffle of the triple stream.",
     )
 
+    # 2b. graph stage: A1 ids, then the edges against the checkpointed nodes
+    import tempfile
+
+    from graph_embeddings_spark.graph.materialize import build_edges, build_nodes, edge_type_ids
+    from graph_embeddings_spark.pipeline import checkpoint_stage
+
+    triples = spark.createDataFrame(
+        [("a", "knows", "b", 0), ("b", "knows", "c", 0), ("a", "name", "A", 2),
+         ("b", "name", "A", 2), ("c", "age", "7", 2)],
+        "subj string, pred string, obj string, obj_kind int",
+    )
+    weights = {"knows": 1.0, "name": 0.5}
+    weighted = filter_by_predicate_weights(triples, weights)
+    nodes = build_nodes(weighted)
+    add(
+        "Graph stage: A1 consecutive node ids",
+        nodes,
+        "Distinct nodes -> range exchange on (node_type, label, pred_ctx) -> "
+        "sort within partitions -> monotonically_increasing_id(), cached; "
+        "one count job gives the per-partition offsets, which enter the plan "
+        "as an array literal. No Python stage, no single-task window.",
+    )
+    with tempfile.TemporaryDirectory(prefix="plan-audit-") as work:
+        nodes_ck = checkpoint_stage(nodes, work, "nodes")
+        add(
+            "Graph stage: edges against the checkpointed nodes",
+            build_edges(weighted, nodes_ck, edge_type_ids(["age", "knows", "name"], weights)),
+            "The same F1-weighted triples joined to the node checkpoint (both "
+            "dictionary sides broadcast); the A2 etype is a map-literal lookup "
+            "numbered on the driver, so no window job and no third join.",
+        )
+
     # 3. pricing summary (partial agg)
     add(
         "TPC-H Q1 shape (pricing_summary)",
