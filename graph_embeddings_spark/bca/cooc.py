@@ -34,9 +34,7 @@ Scale design:
   * rounds are bounded: paint decays by >= (1-alpha) per hop, so
     #rounds <= log(eps)/log(1-alpha); max_rounds_bound enforces it.
   * hub-node skew (north_rule): the expansion join fans out by out-degree;
-    AQE skew-join splits oversized partitions, and `salt_degree` splits the
-    adjacency rows of ultra-high-degree nodes over salted sub-keys so a
-    single hub never pins one task (re-merged by the round's groupBy).
+    AQE skew-join splits oversized partitions.
 """
 
 from __future__ import annotations
@@ -57,16 +55,12 @@ _BROADCAST_EDGE_LIMIT = 2_000_000
 _PROBE_EVERY = 4
 
 
-def build_adjacency(edges: DataFrame, direction: str, salt_degree: int = 0) -> DataFrame:
+def build_adjacency(edges: DataFrame, direction: str) -> DataFrame:
     """edges(src, dst, etype, weight) -> adj(node, dst, weight, wsum).
 
     direction: 'out' (follow src->dst), 'in' (reverse: dst->src), or 'both'
     (undirected kernel: out ∪ in per UndirectedWeighted.java:56-67 — wsum is
     the combined in+out weight sum).
-
-    salt_degree > 0 additionally splits each node's adjacency rows into
-    pmod(hash(dst), salt) sub-groups *only* for plan-level skew relief; the
-    per-round groupBy(root, node) re-merges, so results are unchanged.
     """
     out = edges.select(F.col("src").alias("node"), F.col("dst"), F.col("weight").cast("double"))
     rev = edges.select(F.col("dst").alias("node"), F.col("src").alias("dst"), F.col("weight").cast("double"))
@@ -86,21 +80,9 @@ def build_adjacency(edges: DataFrame, direction: str, salt_degree: int = 0) -> D
     # the loop path; A/B-measured faster at 10k pages and strictly fewer
     # exchanges at any scale). Window output keeps hash(node) partitioning,
     # exactly what the per-round co-partitioned join requires.
-    flat = adj.repartition("node").withColumn(
+    return adj.repartition("node").withColumn(
         "wsum", F.sum("weight").over(Window.partitionBy("node"))
     )
-    if salt_degree > 0:
-        # real salting: partition the adjacency by (node, _salt) so one
-        # hub's rows spread over salt_degree partitions; the expansion join
-        # (_one_direction) explodes each frontier row across all salt
-        # values and joins on (node, _salt), so the hub fan-out runs in
-        # salt_degree tasks instead of one. The round groupBy re-merges.
-        flat = flat.withColumn(
-            "_salt", F.pmod(F.xxhash64("dst"), F.lit(salt_degree)).cast("int")
-        )
-        return flat.repartition("node", "_salt")
-    # already hash(node)-partitioned by the window's repartition above
-    return flat
 
 
 def max_rounds_bound(alpha: float, epsilon: float) -> int:
@@ -117,7 +99,6 @@ def expand_round(
     adj: DataFrame,
     alpha: float,
     epsilon: float,
-    join_keys=("node",),
 ) -> DataFrame:
     """One level-synchronous expansion: frontier ⋈ adjacency -> moved paint
     -> merged next frontier. The SINGLE definition of the round plan,
@@ -134,7 +115,7 @@ def expand_round(
     map-side combine loses little here because a dst's in-neighbors hash
     across partitions. Measured 1.8x on the 10k-page bench graph."""
     moved = (
-        frontier.join(adj, list(join_keys))
+        frontier.join(adj, "node")
         .select(
             "root",
             F.col("dst").alias("node"),
@@ -157,7 +138,6 @@ def _one_direction(
     alpha: float,
     epsilon: float,
     max_rounds: int,
-    salt_degree: int = 0,
 ) -> DataFrame:
     """Run the paint loop for every root in `roots` (node_id long) against a
     prebuilt adjacency; returns un-normalized bcv(i, j, x) with the root
@@ -180,17 +160,7 @@ def _one_direction(
             wet.select("root", "node", (F.lit(alpha) * F.col("paint")).alias("x"))
         )
         frontier = wet.filter(F.col("paint") >= epsilon)
-        join_keys = ["node"]
-        if salt_degree > 0:
-            # replicate each frontier row to every salt sub-key: a hub
-            # node's expansion then runs as salt_degree co-partitioned
-            # join tasks instead of one (re-merged by the groupBy below)
-            frontier = frontier.withColumn(
-                "_salt",
-                F.explode(F.sequence(F.lit(0), F.lit(salt_degree - 1)).cast("array<int>")),
-            )
-            join_keys = ["node", "_salt"]
-        wet = expand_round(frontier, adj, alpha, epsilon, join_keys).localCheckpoint(eager=True)
+        wet = expand_round(frontier, adj, alpha, epsilon).localCheckpoint(eager=True)
         if _round % _PROBE_EVERY == _PROBE_EVERY - 1 and not wet.take(1):
             break
     bcv = retained_parts[0]
@@ -405,7 +375,6 @@ def bca_cooccurrence(
     epsilon: float,
     directed: bool = False,
     normalize: str = NORM_NONE,
-    salt_degree: int = 0,
     strategy: str = "auto",
 ) -> CoocResult:
     """Full BCA stage (BookmarkColoring.java:32-120 analog).
@@ -454,20 +423,20 @@ def bca_cooccurrence(
         # unpersisted plan would re-shuffle (and re-scan) it per round, and
         # the cached InMemoryTableScan keeps the repartition('node') output
         # partitioning so the join only exchanges the frontier side
-        adj_out = build_adjacency(edges, "out", salt_degree).persist()
-        adj_in = build_adjacency(edges, "in", salt_degree).persist()
+        adj_out = build_adjacency(edges, "out").persist()
+        adj_in = build_adjacency(edges, "in").persist()
         adj_caches += [adj_out, adj_in]
-        fwd = _one_direction(roots, adj_out, alpha, epsilon, rounds, salt_degree)
-        rev = _one_direction(roots, adj_in, alpha, epsilon, rounds, salt_degree)
+        fwd = _one_direction(roots, adj_out, alpha, epsilon, rounds)
+        rev = _one_direction(roots, adj_in, alpha, epsilon, rounds)
         bcv = (
             fwd.unionAll(rev)
             .groupBy("i", "j")
             .agg(F.sum("x").alias("x"))
         )
     else:
-        adj = build_adjacency(edges, "both", salt_degree).persist()
+        adj = build_adjacency(edges, "both").persist()
         adj_caches.append(adj)
-        bcv = _one_direction(roots, adj, alpha, epsilon, rounds, salt_degree)
+        bcv = _one_direction(roots, adj, alpha, epsilon, rounds)
 
     normed = normalize_bcvs(bcv, normalize)
     normed = normed.persist()

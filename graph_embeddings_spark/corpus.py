@@ -24,7 +24,7 @@ Corpus properties (FIXTURES.md §1):
     pipeline must keep the latest);
   * ~2% malformed html rows (invalid UTF-8 / no content blocks) whose golden
     text is '' — the extractor must not error;
-  * 5 hub entities appear in ~20% of pages (exercises skew salting);
+  * 5 hub entities appear in ~20% of pages (exercises hub skew);
   * ~10% non-English rows carry no planted facts (exercises lang filtering).
 """
 

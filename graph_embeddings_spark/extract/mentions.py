@@ -9,7 +9,7 @@ Scale notes:
     (Spark broadcast join for the linking step; compiled-regex closure for
     the detection UDF). At 10^8-alias scale the alternation regex would be
     replaced by an Aho-Corasick automaton per executor — same operator
-    shape, swapped kernel (pyahocorasick is gated behind an import-try).
+    shape, swapped kernel.
   * linking itself is a JVM-side broadcast hash join + max_by — no Python.
 """
 
@@ -20,13 +20,6 @@ import re
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import ArrayType, StringType
-
-try:  # optional fast path at very large dictionary sizes
-    import ahocorasick  # type: ignore
-
-    _HAS_AHOCORASICK = True
-except Exception:  # pragma: no cover
-    _HAS_AHOCORASICK = False
 
 
 def _trie_body(node: dict) -> str:

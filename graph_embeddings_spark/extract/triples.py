@@ -168,18 +168,3 @@ def link_triples(surface_df: DataFrame, alias_df: DataFrame) -> DataFrame:
         )
         .filter(F.col("obj").isNotNull())
     )
-
-
-def triples_from_pages(pages_df: DataFrame, alias_df: DataFrame, aliases: list[str]) -> DataFrame:
-    """Convenience: full extraction path on already-deduped pages."""
-    surface = extract_surface_triples(pages_df, aliases)
-    return link_triples(surface, alias_df)
-
-
-def precision_recall(got: DataFrame, expected: DataFrame) -> tuple[float, float]:
-    """Distinct-(subj,pred,obj) P/R — the SURVEY.md §5 parity gate."""
-    g = got.select("subj", "pred", "obj").distinct()
-    e = expected.select("subj", "pred", "obj").distinct()
-    tp = g.join(e, ["subj", "pred", "obj"], "inner").count()
-    gn, en = g.count(), e.count()
-    return (tp / gn if gn else 0.0, tp / en if en else 0.0)

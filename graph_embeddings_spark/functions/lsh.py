@@ -254,25 +254,11 @@ def lsh_candidate_pairs(
 ) -> DataFrame:
     """Self-join candidates (a < b) from banded MinHash buckets.
 
-    Buckets larger than ``max_bucket`` are dropped (skew guard); the count of
-    dropped buckets is observable via the returned DF's 'oversize' lineage —
-    callers wanting it call ``lsh_bucket_stats``.
+    Buckets larger than ``max_bucket`` are dropped (skew guard).
     """
     return lsh_candidate_pairs_from_sig(
         minhash_signatures(df, id_col, shingle_col, num_hashes),
         id_col, num_hashes, bands, max_bucket,
-    )
-
-
-def lsh_bucket_stats(df: DataFrame, id_col: str, shingle_col, num_hashes=16, bands=8) -> DataFrame:
-    """Bucket-size histogram — the 'no silent caps' report for skew review."""
-    bands_df = lsh_bands(
-        minhash_signatures(df, id_col, shingle_col, num_hashes), id_col, num_hashes, bands
-    )
-    return bands_df.groupBy("band", "bucket").count().groupBy().agg(
-        F.count("*").alias("n_buckets"),
-        F.max("count").alias("max_bucket"),
-        F.avg("count").alias("avg_bucket"),
     )
 
 

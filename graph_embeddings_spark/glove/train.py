@@ -777,17 +777,27 @@ def optimize(
     n_shards: int | None = None,
     batch: int = 4096,
     checkpoint_dir: str | None = None,
-    start_params: DataFrame | None = None,
-    start_epoch: int = 0,
 ) -> TrainResult:
     """Epoch loop (Optimizer.java:67-120 analog): shuffle -> shard-train ->
-    average -> cost/tolerance check. Pass checkpoint_dir to write params per
-    epoch (parquet) — `resume_params` reloads them for mid-run resume. The
-    transport (broadcast or grid, module docstring) is picked once per run
-    from the vocabulary size; both give the same params and cost history."""
+    average -> cost/tolerance check. With checkpoint_dir, params are written
+    per epoch (parquet, `_SUCCESS` last) and a call resumes after the last
+    complete epoch there; if that epoch reached maxiter or the tolerance
+    break (`_CONVERGED`), the call trains nothing and returns its checkpoint.
+    cost_history holds the epochs this call ran. The transport (broadcast or
+    grid, module docstring) is picked once per run from the vocabulary
+    size; both give the same params and cost history."""
     import pyarrow as pa
 
     spark = cooc.sparkSession
+    start = 0
+    done = find_completed_epochs(checkpoint_dir) if checkpoint_dir is not None else []
+    if done:
+        params = resume_params(spark, checkpoint_dir, done[-1])
+        if done[-1] + 1 >= maxiter or converged_epoch(checkpoint_dir) == done[-1]:
+            return TrainResult(params=params)
+        start = done[-1] + 1
+    else:
+        params = init_params_df(nodes, dim, seed, method)
     if cost == "pglove":
         # boundary artifacts of LEGITIMATE inputs fall outside the logit
         # domain: unity normalization's -1e-6 floor can give x <= 0, and
@@ -799,24 +809,6 @@ def optimize(
         cooc = cooc.filter((F.col("x") > 0.0) & (F.col("x") != 1.0))
     if n_shards is None:
         n_shards = shards_for(co_count)
-    # a RETRAIN over an old checkpoint dir must clear the previous run's
-    # state at-and-above the restart epoch — otherwise a crash mid-retrain
-    # leaves a stale convergence marker and stale high-epoch params that a
-    # later resume would mistake for THIS run's finished result
-    if checkpoint_dir is not None:
-        import os
-        import shutil
-
-        prior = converged_epoch(checkpoint_dir)
-        if prior is not None and start_epoch <= prior:
-            os.remove(os.path.join(checkpoint_dir, "_CONVERGED"))
-        for ep in find_completed_epochs(checkpoint_dir):
-            if ep >= start_epoch:
-                shutil.rmtree(
-                    os.path.join(checkpoint_dir, f"params_epoch={ep:04d}"),
-                    ignore_errors=True,
-                )
-    params = start_params if start_params is not None else init_params_df(nodes, dim, seed, method)
     # transport (module docstring): the broadcast path keeps the params as
     # one Arrow table on the driver, the grid path as a persisted relation.
     # The vocabulary is probed like BCA's edge list: at most `cap` node ids
@@ -828,8 +820,8 @@ def optimize(
     table = None
     if 0 < len(ids) <= cap:
         table = (
-            start_params.toArrow().sort_by("node_id")
-            if start_params is not None
+            params.toArrow().sort_by("node_id")
+            if start
             else pa.Table.from_batches([_init_batch(np.sort(ids), dim, seed, method)])
         )
     else:
@@ -853,7 +845,7 @@ def optimize(
     # barriers are pure latency here, so the whole loop runs under a
     # static plan (restored on exit)
     with static_epoch_plan(spark):
-        for it in range(start_epoch, maxiter):
+        for it in range(start, maxiter):
             path = None if checkpoint_dir is None else f"{checkpoint_dir}/params_epoch={it:04d}"
             if table is not None:
                 table, total_cost = _broadcast_epoch(

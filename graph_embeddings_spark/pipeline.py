@@ -3,8 +3,8 @@
 The Spark analog of Main.runProgram (Main.java:29-78), re-architected per
 BASELINE.json north_rule: every stage writes a parquet checkpoint with
 per-file lineage rows, so any run resumes from the last completed stage
-(and training resumes mid-epoch via glove.train's per-epoch params
-checkpoints). Stage seams match the reference's:
+(and training resumes after the last complete epoch: glove.train.optimize
+checkpoints its params per epoch). Stage seams match the reference's:
 
     load     (JenaReader)        -> dedup'd pages          [graft: web table]
     extract  (graft surface)     -> text per url
@@ -18,11 +18,20 @@ checkpoints). Stage seams match the reference's:
 `run_graph_pipeline` checkpoints the `triples` stage for both entry points,
 so every later stage reads parquet and the input is parsed once per run.
 
-Checkpoint layout under `work_dir`:
-    <stage>/data/        parquet of the stage output
+Checkpoint layout under `work_dir`. One commit rule: an artifact is
+complete when Spark's `_SUCCESS` (written after every part file) is in its
+directory, and a resumed run rebuilds anything without one.
+    <stage>/data/        parquet of the stage output; data/_SUCCESS commits
+                         the stage
     <stage>/_lineage/    (partition_id, rows, stage) rows, one per data file,
-                         counted from the files' parquet footers
-    <stage>/_DONE        written last: the stage is complete
+                         counted from the files' parquet footers; rewritten
+                         on every call, resumed or not
+    cooc/_meta.json      co_count, max_x, vocab_size; written before the
+                         cooc data, so a committed cooc always has it
+    params/params_epoch=NNNN/   one complete epoch per _SUCCESS; _CONVERGED
+                         marks the tolerance break (glove.train.optimize)
+    export/<name>.{vectors,dict}.tsv/   the export is done when both
+                         directories hold a _SUCCESS
 """
 
 from __future__ import annotations
@@ -33,16 +42,17 @@ import os
 import shutil
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from .config import PipelineConfig
 from .corpus import PHRASE_TO_PRED  # closed predicate vocabulary
 from .bca.cooc import CoocResult, bca_cooccurrence
 from .extract.text import latest_texts, with_extracted_text
 from .extract.triples import extract_surface_triples, link_triples
-from .glove.train import (
-    converged_epoch, extract_embeddings, find_completed_epochs, optimize, resume_params,
-)
+from .glove.train import extract_embeddings, optimize
 from .graph.canonicalize import all_similarity_pairs
 from .graph.materialize import (
     build_edges, edge_type_ids, filter_by_predicate_weights, materialize_graph,
@@ -51,24 +61,40 @@ from .graph.materialize import (
 from .output import filter_embeddings, write_tsv
 
 
-def _stage_paths(work_dir: str, stage: str) -> tuple[str, str, str]:
-    base = os.path.join(work_dir, stage)
-    return os.path.join(base, "data"), os.path.join(base, "_lineage"), os.path.join(base, "_DONE")
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
-def checkpoint_stage(df: DataFrame, work_dir: str, stage: str) -> DataFrame:
-    """Write stage output + per-file lineage (north_rule), return the
-    re-read DF (truncates lineage, makes the stage resumable). The write is
-    the stage's only job: the re-read takes the DataFrame's own schema (no
-    inference job) and the lineage rows come from the written files'
-    parquet footers, read on the driver."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+def checkpoint_stage(df: DataFrame, work_dir: str, stage: str) -> None:
+    """Write a stage's output: the stage's one job. Spark writes
+    `data/_SUCCESS` after every part file, so it is the stage's commit."""
+    df.write.mode("overwrite").parquet(os.path.join(work_dir, stage, "data"))
 
-    data, lineage, done = _stage_paths(work_dir, stage)
-    df.write.mode("overwrite").parquet(data)
+
+def load_stage(spark: SparkSession, work_dir: str, stage: str) -> DataFrame:
+    """A committed stage, read with the Spark schema its part footers carry
+    (Spark stores it even for an empty write), so no inference job runs."""
+    data = os.path.join(work_dir, stage, "data")
+    part = min(f for f in os.listdir(data) if f.endswith(".parquet"))
+    schema = pq.read_metadata(os.path.join(data, part)).metadata[_SPARK_SCHEMA_KEY]
+    return spark.read.schema(StructType.fromJson(json.loads(schema))).parquet(data)
+
+
+def _resumable(spark, work_dir, stage, build_fn, resume: bool, caches: list | None = None):
+    """The stage seam. With a work_dir: unless `resume` is set and the stage
+    is committed, build and write it; either way (re)write `_lineage/` from
+    the part footers and return the checkpoint. caches: DataFrames persisted
+    by build_fn's internals, unpersisted once the stage is durable —
+    without this, every stage's intermediate caches survive the whole run."""
+    if not work_dir:
+        return build_fn()
+    data = os.path.join(work_dir, stage, "data")
+    if not (resume and os.path.exists(os.path.join(data, "_SUCCESS"))):
+        checkpoint_stage(build_fn(), work_dir, stage)
+        for c in caches or ():
+            c.unpersist()
     parts = sorted(f for f in os.listdir(data) if f.endswith(".parquet"))
-    rows = [pq.ParquetFile(os.path.join(data, f)).metadata.num_rows for f in parts]
+    rows = [pq.read_metadata(os.path.join(data, f)).num_rows for f in parts]
+    lineage = os.path.join(work_dir, stage, "_lineage")
     shutil.rmtree(lineage, ignore_errors=True)
     os.makedirs(lineage)
     pq.write_table(pa.table({
@@ -76,34 +102,7 @@ def checkpoint_stage(df: DataFrame, work_dir: str, stage: str) -> DataFrame:
         "rows": pa.array(rows, pa.int64()),
         "stage": [stage] * len(rows),
     }), os.path.join(lineage, "part-00000.parquet"))
-    with open(done, "w") as f:
-        f.write("ok\n")
-    return df.sparkSession.read.schema(df.schema).parquet(data)
-
-
-def stage_done(work_dir: str, stage: str) -> bool:
-    _, _, done = _stage_paths(work_dir, stage)
-    return os.path.exists(done)
-
-
-def load_stage(spark: SparkSession, work_dir: str, stage: str) -> DataFrame:
-    data, _, _ = _stage_paths(work_dir, stage)
-    return spark.read.parquet(data)
-
-
-def _resumable(spark, work_dir, stage, build_fn, resume: bool, caches: list | None = None):
-    """caches: DataFrames persisted by build_fn's internals; once the stage
-    is checkpointed (durable), they are unpersisted — without this, every
-    stage's intermediate caches survive the whole run."""
-    if resume and work_dir and stage_done(work_dir, stage):
-        return load_stage(spark, work_dir, stage)
-    df = build_fn()
-    if work_dir:
-        out = checkpoint_stage(df, work_dir, stage)
-        for c in caches or ():
-            c.unpersist()
-        return out
-    return df
+    return load_stage(spark, work_dir, stage)
 
 
 @dataclass
@@ -232,7 +231,11 @@ def run_graph_pipeline(
 
     # -- BCA co-occurrence ---------------------------------------------------
     cooc_caches: list = []
-    built: list[CoocResult] = []
+    metas: list[dict] = []
+    # co_count/max_x/vocab come with a freshly built cooc and are written
+    # next to it BEFORE its data, so a committed cooc always has them: a
+    # resumed run loads three numbers instead of re-scanning the table
+    meta_path = os.path.join(work_dir, "cooc", "_meta.json") if work_dir else None
 
     def build_cooc():
         res = bca_cooccurrence(
@@ -240,32 +243,25 @@ def run_graph_pipeline(
             alpha=config.bca.alpha, epsilon=config.bca.epsilon,
             directed=config.bca.directed, normalize=config.bca.normalize,
         )
-        built.append(res)
         cooc_caches.append(res.cooc)  # persisted inside bca_cooccurrence
+        metas.append({"co_count": res.co_count, "max_x": res.max_x, "vocab_size": res.vocab_size})
+        if meta_path:
+            os.makedirs(os.path.dirname(meta_path), exist_ok=True)
+            with open(meta_path, "w") as f:
+                json.dump(metas[0], f)
         return res.cooc
 
     cooc_df = _resumable(spark, work_dir, "cooc", build_cooc, resume, caches=cooc_caches)
-    # co_count/max_x/vocab come with a freshly built cooc; they are
-    # checkpointed next to the cooc stage so a fully-resumed run loads
-    # three numbers instead of re-scanning a potentially billions-row table
-    meta_path = os.path.join(work_dir, "cooc", "_meta.json") if work_dir else None
-    if built:
-        res = built[0]
-        meta = {"co_count": res.co_count, "max_x": res.max_x, "vocab_size": res.vocab_size}
-    elif os.path.exists(meta_path):  # not built: loaded from its checkpoint
-        with open(meta_path) as f:
-            meta = json.load(f)
-    else:
-        # a checkpointed cooc stage without _meta.json: one aggregate pass
-        agg = cooc_df.agg(F.count("*").alias("n"), F.max("x").alias("mx")).collect()[0]
-        meta = {
-            "co_count": int(agg["n"]),
-            "max_x": float(agg["mx"]) if agg["mx"] is not None else 0.0,
-            "vocab_size": nodes.count(),
-        }
-    if meta_path:
-        with open(meta_path, "w") as f:
-            json.dump(meta, f)
+    if not metas:  # resumed: the commit guarantees the meta file
+        try:
+            with open(meta_path) as f:
+                metas.append(json.load(f))
+        except FileNotFoundError:
+            raise FileNotFoundError(
+                f"committed cooc stage has no {meta_path}; remove "
+                f"{os.path.join(work_dir, 'cooc', 'data')} to rebuild it"
+            ) from None
+    meta = metas[0]
     cooc = CoocResult(
         cooc=cooc_df, vocab_size=meta["vocab_size"], co_count=meta["co_count"],
         max_x=meta["max_x"],
@@ -273,41 +269,25 @@ def run_graph_pipeline(
 
     embeddings = None
     history: list[float] = []
+    ckpt = os.path.join(work_dir, "params") if work_dir else None
+    if ckpt and not resume:
+        # the graph was rebuilt: the old epochs must not be resumed, also
+        # by a later call when this one does not train
+        shutil.rmtree(ckpt, ignore_errors=True)
     if train:
-        ckpt = os.path.join(work_dir, "params") if work_dir else None
-        # mid-run training resume (north_rule): pick up from the last
-        # COMPLETE per-epoch params checkpoint (parquet _SUCCESS marker)
-        start_params, start_epoch = None, 0
-        if resume and ckpt is not None:
-            done_epochs = find_completed_epochs(ckpt)
-            conv = converged_epoch(ckpt)
-            finished = done_epochs and (
-                max(done_epochs) + 1 >= config.opt.maxiter
-                # the prior run's tolerance break is as final as maxiter:
-                # resuming past it would retrain and CHANGE the embeddings
-                or (conv is not None and conv <= max(done_epochs))
-            )
-            if finished:
-                start_epoch = config.opt.maxiter
-                start_params = resume_params(spark, ckpt, max(done_epochs))
-            elif done_epochs:
-                start_epoch = max(done_epochs) + 1
-                start_params = resume_params(spark, ckpt, max(done_epochs))
+        # optimize resumes after the last complete epoch in ckpt, and trains
+        # nothing if that epoch was the last (maxiter or tolerance break)
         res = optimize(
             cooc.cooc, nodes,
             dim=config.dim, co_count=cooc.co_count, max_x=cooc.max_x,
             cost=config.method, method=config.opt.method,
             maxiter=config.opt.maxiter, tolerance=config.opt.tolerance,
-            seed=config.seed, n_shards=n_shards, batch=batch,
-            checkpoint_dir=ckpt, start_params=start_params, start_epoch=start_epoch,
+            seed=config.seed, n_shards=n_shards, batch=batch, checkpoint_dir=ckpt,
         )
         history = res.cost_history
         trained_now = len(history) > 0  # history holds NEW epochs only
-        if not trained_now and resume and work_dir and stage_done(work_dir, "embeddings"):
-            # fully-resumed run: no epoch executed, so the checkpointed
-            # embeddings are current — skip the join + PCA refit
-            embeddings = load_stage(spark, work_dir, "embeddings")
-        else:
+
+        def build_embeddings():
             vecs = extract_embeddings(res.params)
             if config.pca is not None:
                 # the reference declares pca.variance in every shipped config
@@ -315,20 +295,24 @@ def run_graph_pipeline(
                 from .glove.pca import pca_reduce
 
                 vecs = pca_reduce(vecs, config.pca.variance)
-            embeddings = vecs.join(nodes, "node_id").select(
-                "node_id", "label", "node_type", "vec"
-            )
-            embeddings = _resumable(spark, work_dir, "embeddings", lambda: embeddings, False)
+            return vecs.join(nodes, "node_id").select("node_id", "label", "node_type", "vec")
+
+        # a fully-resumed run (no epoch executed) keeps its committed
+        # embeddings: no join + PCA refit
+        embeddings = _resumable(
+            spark, work_dir, "embeddings", build_embeddings, resume and not trained_now,
+        )
         if work_dir:
             export_dir = os.path.join(work_dir, "export")
-            export_done = os.path.join(export_dir, "_DONE")
+            exported = all(
+                os.path.exists(os.path.join(export_dir, f"{config.output.name}.{kind}.tsv", "_SUCCESS"))
+                for kind in ("vectors", "dict")
+            )
             # two global sorts: only re-export when something trained or the
-            # prior export never finished
-            if trained_now or not resume or not os.path.exists(export_done):
+            # prior export never committed both files
+            if trained_now or not resume or not exported:
                 filtered = filter_embeddings(embeddings, config.output)
                 write_tsv(filtered, export_dir, config.output.name, config=config)
-                with open(export_done, "w") as f:
-                    f.write("ok\n")
 
     return PipelineResult(
         triples=triples, nodes=nodes, edges=all_edges, cooc=cooc,

@@ -195,25 +195,6 @@ def test_strategies_agree_on_weighted_fork(spark):
             assert a[root][j] == pytest.approx(b[root][j], abs=1e-9)
 
 
-def test_salted_loop_matches_unsalted(spark):
-    """salt_degree splits hub adjacency across (node, _salt) sub-partitions;
-    the frontier replication + round groupBy must leave values unchanged."""
-    nodes, edf = _graph_dfs(spark, FORK, 4)
-    a = _collect_bcvs(
-        bca_cooccurrence(nodes, edf, ALPHA, EPS, directed=True, strategy="loop").cooc
-    )
-    b = _collect_bcvs(
-        bca_cooccurrence(
-            nodes, edf, ALPHA, EPS, directed=True, strategy="loop", salt_degree=3
-        ).cooc
-    )
-    assert set(a) == set(b)
-    for root in a:
-        assert set(a[root]) == set(b[root])
-        for j in a[root]:
-            assert a[root][j] == pytest.approx(b[root][j], abs=1e-9)
-
-
 def test_paint_conservation(spark):
     """Sum of retained paint per root <= 1 per pass (paint only leaks via
     epsilon drops / dead ends); >= alpha (the root always retains)."""

@@ -273,11 +273,12 @@ def test_checkpoint_resume(spark, tmp_path):
 
 
 def test_find_completed_epochs_and_midrun_resume(spark, tmp_path, transport):
-    """A 2-epoch run resumed for 2 more must equal an uninterrupted 4-epoch
-    run (same seed: the per-epoch shuffle key is seed+iteration, so the
-    resumed epochs replay the identical permutations), on either
-    transport."""
-    from graph_embeddings_spark.glove.train import find_completed_epochs, resume_params
+    """A 2-epoch call, then a maxiter=4 call on the same checkpoint dir,
+    must equal an uninterrupted 4-epoch call (same seed: the per-epoch
+    shuffle key is seed+iteration, so the resumed epochs replay the
+    identical permutations), on either transport. The second call runs only
+    epochs 2 and 3, and a third call on the finished dir trains nothing."""
+    from graph_embeddings_spark.glove.train import find_completed_epochs
 
     cooc, nodes = _tiny_cooc(spark)
     ck1 = str(tmp_path / "interrupted")
@@ -289,18 +290,26 @@ def test_find_completed_epochs_and_midrun_resume(spark, tmp_path, transport):
     resumed = optimize(
         cooc, nodes, dim=4, co_count=8, max_x=3.0, maxiter=4, tolerance=0.0,
         seed=42, n_shards=2, batch=1, checkpoint_dir=ck1,
-        start_params=resume_params(spark, ck1, 1), start_epoch=2,
     )
+    assert len(resumed.cost_history) == 2
+    assert find_completed_epochs(ck1) == [0, 1, 2, 3]
     ck2 = str(tmp_path / "straight")
     straight = optimize(
         cooc, nodes, dim=4, co_count=8, max_x=3.0, maxiter=4, tolerance=0.0,
         seed=42, n_shards=2, batch=1, checkpoint_dir=ck2,
     )
+    assert resumed.cost_history == pytest.approx(straight.cost_history[2:], rel=1e-9)
     a = {r["node_id"]: list(r["focus"]) for r in resumed.params.collect()}
     b = {r["node_id"]: list(r["focus"]) for r in straight.params.collect()}
     assert set(a) == set(b)
     for k in a:
         assert a[k] == pytest.approx(b[k], abs=1e-6)
+    again = optimize(
+        cooc, nodes, dim=4, co_count=8, max_x=3.0, maxiter=4, tolerance=0.0,
+        seed=42, n_shards=2, batch=1, checkpoint_dir=ck1,
+    )
+    assert again.cost_history == []
+    assert {r["node_id"]: list(r["focus"]) for r in again.params.collect()} == a
     assert find_completed_epochs(str(tmp_path / "missing")) == []
 
 
@@ -423,34 +432,6 @@ def test_pglove_rejects_out_of_domain_x():
         inner_and_weight("pglove", np.array([3.0]), z, z, z, max_x=1.0)
     inner, w = inner_and_weight("pglove", np.array([0.5]), z, z, z, max_x=1.0)
     assert np.isfinite(inner).all()
-
-
-def test_retrain_clears_stale_convergence_state(spark, tmp_path):
-    """Restarting training from epoch 0 over an old checkpoint dir must
-    clear the prior _CONVERGED marker and the stale high-epoch params —
-    otherwise a crash mid-retrain would later 'resume' into the OLD run's
-    parameters."""
-    import os
-
-    from graph_embeddings_spark.glove.train import (
-        converged_epoch, find_completed_epochs, mark_converged, optimize,
-    )
-
-    cooc, nodes = _tiny_cooc(spark)
-    ckpt = str(tmp_path / "params")
-    kw = dict(dim=4, co_count=8, max_x=3.0, cost="glove", method="adagrad",
-              seed=42, n_shards=2, batch=1, checkpoint_dir=ckpt)
-    optimize(cooc, nodes, maxiter=3, tolerance=0.0, **kw)  # run A: 3 epochs
-    mark_converged(ckpt, 2, 0.5)  # as if A's tolerance break fired at epoch 2
-    assert sorted(find_completed_epochs(ckpt)) == [0, 1, 2]
-
-    # retrain from scratch but stop after ONE epoch (stands in for a crash
-    # mid-retrain: fewer epochs completed than run A had)
-    optimize(cooc, nodes, maxiter=1, tolerance=0.0, **kw)
-    assert converged_epoch(ckpt) is None  # stale marker gone
-    left = find_completed_epochs(ckpt)
-    assert max(left) == 0  # run A's higher epochs were purged
-    assert os.path.isdir(os.path.join(ckpt, "params_epoch=0000"))
 
 
 def _rand_cooc(spark, n_nodes=60, entries=600):

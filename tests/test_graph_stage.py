@@ -1,11 +1,13 @@
 """The graph stage of `run_graph_pipeline`: the id assigner's order
-contract, resume across the nodes/edges checkpoints, per-file lineage, and
-a budget on the Spark jobs one call runs."""
+contract, resume across the nodes/edges checkpoints, per-file lineage, a
+budget on the Spark jobs one call runs, and the work_dir's commit rule (a
+stage is complete when Spark's `data/_SUCCESS` is there)."""
 
 from __future__ import annotations
 
 import collections
 import os
+import pathlib
 import shutil
 
 import pyarrow.parquet as pq
@@ -24,6 +26,14 @@ EX = "http://ex.org/"
 # 44 jobs (67 when every graph stage re-parsed the input and each
 # checkpoint re-scanned its output); 3 of margin
 JOB_BUDGET = 47
+# a fully resumed call on that work_dir ran 0 jobs (12 when each resumed
+# stage was read without a schema, one inference job per read); any job
+# here re-derives a committed artifact
+RESUME_JOB_BUDGET = 0
+# the checkpointed stages, and all of the work_dir's artifacts in the order
+# a call commits them
+STAGES = ("triples", "nodes", "edges", "sim_edges", "cooc", "embeddings")
+ARTIFACTS = ("triples", "nodes", "edges", "sim_edges", "cooc", "params", "embeddings", "export")
 
 
 def _nt_lines() -> list[str]:
@@ -63,6 +73,31 @@ def _edges(df) -> collections.Counter:
     )
 
 
+def _tsvs(work: str) -> dict[str, bytes]:
+    """The export's bytes per TSV directory, part files in order."""
+    export = pathlib.Path(work, "export")
+    return {
+        d.name: b"".join(p.read_bytes() for p in sorted(d.glob("part-*")))
+        for d in sorted(export.iterdir())
+    }
+
+
+def _lineages(work: str) -> dict[str, list]:
+    return {s: pq.read_table(os.path.join(work, s, "_lineage")).to_pylist() for s in STAGES}
+
+
+def _run_in_group(spark, group: str, *args, **kwargs):
+    """One run_graph_pipeline call under its own job group -> (result, job ids)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        res = run_graph_pipeline(spark, *args, **kwargs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return res, sc.statusTracker().getJobIdsForGroup(group)
+
+
 @pytest.fixture(scope="module")
 def graph_run(spark, tmp_path_factory):
     """One fresh call into an empty work_dir, run under its own job group."""
@@ -70,18 +105,13 @@ def graph_run(spark, tmp_path_factory):
     nt = root / "g.nt"
     nt.write_text("\n".join(_nt_lines()) + "\n")
     work = str(root / "work")
-    sc = spark.sparkContext
-    sc.setJobGroup("graph_stage_budget", "one run_graph_pipeline call")
-    try:
-        res = run_graph_pipeline(spark, read_rdf(spark, str(nt)), _config(), work_dir=work)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    jobs = sc.statusTracker().getJobIdsForGroup("graph_stage_budget")
+    res, jobs = _run_in_group(
+        spark, "graph_stage_budget", read_rdf(spark, str(nt)), _config(), work_dir=work,
+    )
     edges = res.edges.filter(F.col("etype") > 0)
     return {
         "nt": str(nt), "work": work, "jobs": jobs,
-        "nodes": _nodes(res.nodes), "edges": _edges(edges),
+        "nodes": _nodes(res.nodes), "edges": _edges(edges), "tsvs": _tsvs(work),
     }
 
 
@@ -113,12 +143,11 @@ def test_resume_rebuilds_edges_against_checkpointed_nodes(spark, graph_run):
     edges, against the checkpointed ids: nodes and the edge multiset equal
     the fresh call's."""
     work = graph_run["work"]
-    os.remove(os.path.join(work, "edges", "_DONE"))
     shutil.rmtree(os.path.join(work, "edges", "data"))
     res = run_graph_pipeline(
         spark, read_rdf(spark, graph_run["nt"]), _config(), work_dir=work, train=False,
     )
-    assert os.path.exists(os.path.join(work, "edges", "_DONE"))
+    assert os.path.exists(os.path.join(work, "edges", "data", "_SUCCESS"))
     assert _nodes(res.nodes) == graph_run["nodes"]
     assert _edges(res.edges.filter(F.col("etype") > 0)) == graph_run["edges"]
 
@@ -127,8 +156,7 @@ def test_lineage_rows_sum_to_stage_rows(graph_run):
     """Each stage's `_lineage` rows (one per written file) add up to the
     rows of its `data/`."""
     work = graph_run["work"]
-    stages = ("triples", "nodes", "edges", "sim_edges", "cooc", "embeddings")
-    for stage in stages:
+    for stage in STAGES:
         lineage = pq.read_table(os.path.join(work, stage, "_lineage"))
         assert lineage.column_names == ["partition_id", "rows", "stage"]
         assert set(lineage.column("stage").to_pylist()) == {stage}
@@ -140,3 +168,75 @@ def test_call_stays_within_job_budget(graph_run):
     """Spark jobs are the unit of cost at this input size: one call must not
     drift back towards re-parsing its input or re-deriving its stages."""
     assert 0 < len(graph_run["jobs"]) <= JOB_BUDGET, len(graph_run["jobs"])
+
+
+@pytest.mark.parametrize("stage", ["nodes", "cooc", "embeddings"])
+def test_uncommitted_stage_is_rebuilt(spark, graph_run, tmp_path, stage):
+    """A kill while `stage` was being written leaves its part files but no
+    `data/_SUCCESS`, and nothing after it. The resumed call rebuilds that
+    stage and everything after it, and exports byte-identical TSVs."""
+    work = str(tmp_path / "work")
+    shutil.copytree(graph_run["work"], work)
+    data = os.path.join(work, stage, "data")
+    os.remove(os.path.join(data, "_SUCCESS"))
+    for later in ARTIFACTS[ARTIFACTS.index(stage) + 1:]:
+        shutil.rmtree(os.path.join(work, later))
+    def parts():
+        return {f for f in os.listdir(data) if f.startswith("part-")}
+
+    killed = parts()
+    res = run_graph_pipeline(spark, read_rdf(spark, graph_run["nt"]), _config(), work_dir=work)
+    assert os.path.exists(os.path.join(data, "_SUCCESS"))
+    assert parts().isdisjoint(killed)  # rewritten, not reused
+    assert len(res.cost_history) == (0 if stage == "embeddings" else 2)
+    assert _nodes(res.nodes) == graph_run["nodes"]
+    assert _tsvs(work) == graph_run["tsvs"]
+
+
+def test_deleted_lineage_is_rewritten_on_resume(spark, graph_run):
+    """A committed stage whose `_lineage/` was deleted resumes with the same
+    lineage rows, from the same part footers."""
+    work = graph_run["work"]
+    before = _lineages(work)
+    for stage in before:
+        shutil.rmtree(os.path.join(work, stage, "_lineage"))
+    run_graph_pipeline(spark, read_rdf(spark, graph_run["nt"]), _config(), work_dir=work)
+    assert _lineages(work) == before
+
+
+def test_resumed_call_runs_no_job(spark, graph_run):
+    """Every artifact committed: a resumed call reads each stage with the
+    schema its footers carry (no inference job), trains nothing and keeps
+    the export."""
+    res, jobs = _run_in_group(
+        spark, "graph_stage_resume", read_rdf(spark, graph_run["nt"]), _config(),
+        work_dir=graph_run["work"],
+    )
+    assert len(jobs) <= RESUME_JOB_BUDGET, len(jobs)
+    assert res.cost_history == []
+    assert _tsvs(graph_run["work"]) == graph_run["tsvs"]
+
+
+def test_committed_cooc_without_meta_fails(spark, graph_run, tmp_path):
+    """cooc/_meta.json is written before the cooc data commits, so a
+    committed cooc without it is a damaged work_dir: the error names it."""
+    work = str(tmp_path / "work")
+    shutil.copytree(graph_run["work"], work)
+    os.remove(os.path.join(work, "cooc", "_meta.json"))
+    with pytest.raises(FileNotFoundError, match="_meta.json"):
+        run_graph_pipeline(
+            spark, read_rdf(spark, graph_run["nt"]), _config(), work_dir=work, train=False,
+        )
+
+
+def test_rebuild_without_training_clears_params(spark, graph_run, tmp_path):
+    """resume=False rebuilds the graph even when it does not train, so the
+    old graph's epochs go: a later resumed call must train the new graph,
+    not return the old params."""
+    work = str(tmp_path / "work")
+    shutil.copytree(graph_run["work"], work)
+    run_graph_pipeline(
+        spark, read_rdf(spark, graph_run["nt"]), _config(), work_dir=work,
+        resume=False, train=False,
+    )
+    assert not os.path.exists(os.path.join(work, "params"))

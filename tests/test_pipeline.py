@@ -13,13 +13,13 @@ from graph_embeddings_spark.corpus import (
     expected_triples_df,
     web_pages_df,
 )
-from graph_embeddings_spark.extract.triples import precision_recall
 from graph_embeddings_spark.metrics import (
     cosine_neighbor_rank,
     link_prediction_auc,
     mean_reciprocal_rank,
 )
 from graph_embeddings_spark.pipeline import run_pipeline
+from triple_gate import precision_recall
 
 N_PAGES = 300
 
@@ -132,8 +132,9 @@ def test_link_prediction_auc_raises_when_no_negatives(spark):
 def test_resume_from_checkpoint(spark, world, pipe):
     """Re-running with resume=True must reuse checkpoints (same node ids)
     without recomputing stages. The resumed cooc metadata comes from
-    cooc/_meta.json (or, with that file gone, one aggregate over the
-    checkpointed cooc) and must equal what the fresh BCA build reported."""
+    cooc/_meta.json and must equal what the fresh BCA build reported; with
+    the cooc's commit (data/_SUCCESS) gone, the stage is rebuilt and its
+    rewritten meta is equal too."""
     import os
 
     res, work, cfg = pipe
@@ -156,9 +157,13 @@ def test_resume_from_checkpoint(spark, world, pipe):
     assert meta(res2) == meta(res)
 
     meta_path = os.path.join(work, "cooc", "_meta.json")
-    os.remove(meta_path)
+    with open(meta_path) as f:
+        before = f.read()
+    os.remove(os.path.join(work, "cooc", "data", "_SUCCESS"))
     assert meta(resume()) == meta(res)
-    assert os.path.exists(meta_path)
+    assert os.path.exists(os.path.join(work, "cooc", "data", "_SUCCESS"))
+    with open(meta_path) as f:
+        assert f.read() == before
 
 
 def test_lineage_rows_written(pipe):
@@ -166,5 +171,5 @@ def test_lineage_rows_written(pipe):
 
     _, work, _ = pipe
     for stage in ("extract", "triples", "nodes", "edges", "cooc"):
-        assert os.path.exists(os.path.join(work, stage, "_DONE"))
+        assert os.path.exists(os.path.join(work, stage, "data", "_SUCCESS"))
         assert os.path.isdir(os.path.join(work, stage, "_lineage"))

@@ -3,6 +3,10 @@ directed BCA + normalization through the full stack."""
 
 from __future__ import annotations
 
+import json
+import os
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -94,30 +98,62 @@ def test_pipeline_directed_counts_normalization(spark, world):
     assert stats["roots"] == 0
 
 
-def test_resume_after_convergence_is_noop(spark, world, tmp_path):
+@pytest.fixture(scope="module")
+def converged_run(spark, world, tmp_path_factory):
+    """One trained call whose tolerance break fires early, in its own work_dir."""
+    work = str(tmp_path_factory.mktemp("converged") / "work")
+    pages = web_pages_df(spark, world, 60, partitions=2)
+    cfg = _cfg(opt=OptConfig(method="adagrad", tolerance=1e9, maxiter=8))
+
+    def run(resume: bool):
+        return run_pipeline(
+            spark, pages, alias_dict_df(spark, world), sorted(world.alias_map),
+            cfg, work_dir=work, resume=resume, train=True, n_shards=2, batch=256,
+        )
+
+    res = run(True)
+    assert 0 < len(res.cost_history) < 8  # tolerance break fired early
+    vecs = {r["node_id"]: list(r["vec"]) for r in res.embeddings.collect()}
+    return {"work": work, "run": run, "history": res.cost_history, "vecs": vecs}
+
+
+def _export_commits(work: str) -> list[str]:
+    export = os.path.join(work, "export")
+    return [os.path.join(export, d, "_SUCCESS") for d in sorted(os.listdir(export))]
+
+
+def test_resume_after_convergence_is_noop(converged_run):
     """A run whose training hit the tolerance break must NOT retrain (and
     must not rewrite the export) when resumed — the convergence marker is
     as final as maxiter."""
-    import os
+    commits = _export_commits(converged_run["work"])
+    assert len(commits) == 2 and all(os.path.exists(c) for c in commits)
+    stamps = [os.path.getmtime(c) for c in commits]
 
-    work = str(tmp_path / "work")
-    pages = web_pages_df(spark, world, 60, partitions=2)
-    cfg = _cfg(opt=OptConfig(method="adagrad", tolerance=1e9, maxiter=8))
-    res1 = run_pipeline(
-        spark, pages, alias_dict_df(spark, world), sorted(world.alias_map),
-        cfg, work_dir=work, resume=True, train=True, n_shards=2, batch=256,
-    )
-    assert 0 < len(res1.cost_history) < 8  # tolerance break fired early
-    export_done = os.path.join(work, "export", "_DONE")
-    assert os.path.exists(export_done)
-    stamp = os.path.getmtime(export_done)
-
-    res2 = run_pipeline(
-        spark, pages, alias_dict_df(spark, world), sorted(world.alias_map),
-        cfg, work_dir=work, resume=True, train=True, n_shards=2, batch=256,
-    )
+    res2 = converged_run["run"](True)
     assert res2.cost_history == []  # zero new epochs
-    assert os.path.getmtime(export_done) == stamp  # export untouched
-    a = {r["node_id"]: list(r["vec"]) for r in res1.embeddings.collect()}
+    assert [os.path.getmtime(c) for c in commits] == stamps  # export untouched
     b = {r["node_id"]: list(r["vec"]) for r in res2.embeddings.collect()}
-    assert a == b
+    assert b == converged_run["vecs"]
+
+
+def test_retrain_clears_stale_training_state(converged_run):
+    """run_pipeline(resume=False) over a converged work_dir retrains from
+    epoch 0: the prior _CONVERGED marker and any higher-epoch params are
+    gone, so a later resume cannot mistake the old run's state for this
+    one's, and the retrain reproduces the first run."""
+    from graph_embeddings_spark.glove.train import converged_epoch, find_completed_epochs
+
+    ckpt = os.path.join(converged_run["work"], "params")
+    # stale state a resume would take as complete: a high epoch and a marker
+    shutil.copytree(os.path.join(ckpt, "params_epoch=0000"), os.path.join(ckpt, "params_epoch=0007"))
+    with open(os.path.join(ckpt, "_CONVERGED"), "w") as f:
+        json.dump({"epoch": 7, "final_cost": 0.5}, f)
+
+    res = converged_run["run"](False)
+    history = converged_run["history"]
+    assert res.cost_history == history
+    assert find_completed_epochs(ckpt) == list(range(len(history)))
+    assert converged_epoch(ckpt) == len(history) - 1
+    b = {r["node_id"]: list(r["vec"]) for r in res.embeddings.collect()}
+    assert b == converged_run["vecs"]

@@ -18,10 +18,9 @@ from graph_embeddings_spark.extract.text import latest_pages
 from graph_embeddings_spark.extract.triples import (
     _block_triples,
     extract_surface_triples,
-    precision_recall,
-    triples_from_pages,
 )
 from graph_embeddings_spark.extract.mentions import alias_regex
+from triple_gate import precision_recall, triples_from_pages
 
 
 def test_block_triples_unit():

@@ -84,7 +84,7 @@ def main():
     import tempfile
 
     from graph_embeddings_spark.graph.materialize import build_edges, build_nodes, edge_type_ids
-    from graph_embeddings_spark.pipeline import checkpoint_stage
+    from graph_embeddings_spark.pipeline import _resumable
 
     triples = spark.createDataFrame(
         [("a", "knows", "b", 0), ("b", "knows", "c", 0), ("a", "name", "A", 2),
@@ -103,7 +103,7 @@ def main():
         "as an array literal. No Python stage, no single-task window.",
     )
     with tempfile.TemporaryDirectory(prefix="plan-audit-") as work:
-        nodes_ck = checkpoint_stage(nodes, work, "nodes")
+        nodes_ck = _resumable(spark, work, "nodes", lambda: nodes, resume=False)
         add(
             "Graph stage: edges against the checkpointed nodes",
             build_edges(weighted, nodes_ck, edge_type_ids(["age", "knows", "name"], weights)),
