@@ -7,8 +7,8 @@ DataFrame stage; all deterministic (literal hash seeds), all shuffle-aware:
   ngram_jaccard  char-3-gram shingle sets, pair jaccard >= threshold;
                  blocking via shared-shingle join (prefix filter), exact
                  jaccard JVM-side.
-  minhash_lsh    banded MinHash candidates (functions/lsh.py — explode/
-                 groupBy/xxhash64, no MLlib boxing), exact-rescore.
+  minhash_lsh    banded MinHash candidates (signatures and band keys from
+                 the numpy shingle kernel, no MLlib boxing), exact-rescore.
   simhash        64-bit simhash from token hashes; near-dup = hamming <= k
                  on block-rotated keys (pigeonhole: 4 16-bit bands).
   embedding      cosine >= threshold over embedding vectors; candidate
@@ -25,9 +25,10 @@ the shared-shingle block join caps bucket sizes like functions/lsh.py.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.lsh import lsh_candidate_pairs, word_shingles_col
+from ..functions.lsh import word_shingles_col
 
 
 def norm_text_col(c=None):
@@ -154,12 +155,54 @@ def _shingle_hashes_np(text: str, k: int):
     return np.unique(z).view(np.int64)
 
 
+# a MinHash value for a doc with no shingles: such docs only collide with
+# each other
+_EMPTY_SIG = 2**63 - 1
+
+
+def _minhash_np(flat, lens, num_hashes: int, bands: int):
+    """(n, num_hashes) MinHash signatures and (n, bands) LSH bucket keys of
+    n shingle sets, given as one int64 array `flat` cut by `lens`.
+
+    Bit-identical to the column expressions ``min(xxhash64(lit(i), sh))``
+    (Long.MAX for an empty set) and ``xxhash64(lit(b), h_{b*r}, ...,
+    h_{b*r+r-1})`` for band b of r rows: Spark folds xxhash64 over its
+    arguments from seed 42, an int literal through hashInt and a long
+    through hashLong. One hash seed at a time, so the temporaries are a
+    few arrays of the batch's shingle count, never shingles x num_hashes."""
+    from ..functions.xxh64 import xxh64_int_np, xxh64_long_np
+
+    seed = np.uint64(42)
+    sig = np.full((len(lens), num_hashes), _EMPTY_SIG, dtype=np.int64)
+    nonempty = lens > 0
+    if flat.size:
+        starts = (np.cumsum(lens) - lens)[nonempty]
+        u = flat.view(np.uint64)
+        for i in range(num_hashes):
+            h = xxh64_long_np(u, xxh64_int_np(np.uint64(i), seed)).view(np.int64)
+            sig[nonempty, i] = np.minimum.reduceat(h, starts)
+    rows = num_hashes // bands
+    keys = np.empty((len(lens), bands), dtype=np.int64)
+    for b in range(bands):
+        h = xxh64_int_np(np.uint64(b), seed)
+        for j in range(b * rows, (b + 1) * rows):
+            h = xxh64_long_np(sig[:, j].view(np.uint64), h)
+        keys[:, b] = h.view(np.int64)
+    return sig, keys
+
+
 def hashed_shingles(
-    docs: DataFrame, k: int, n_part: int, id_col: str = "doc_id", text_col: str = "text"
+    docs: DataFrame, k: int, n_part: int, id_col: str = "doc_id", text_col: str = "text",
+    minhash: tuple[int, int] | None = None,
 ) -> DataFrame:
     """(id_col, text_col) -> (id, _sh array<long>): Arrow-batched numpy
     shingler — the single candidate-generation shingle kernel (MinHash
     dedup, ngram-jaccard blocking, J1 canonicalization).
+
+    minhash=(num_hashes, bands) adds, from the same hashed shingles,
+    `_sig` (the num_hashes MinHash values) and `_keys` (one LSH bucket per
+    band; see _minhash_np), so banded MinHash is one Python stage from text
+    to band keys with no explode/aggregate in between.
 
     This is deliberately a Python stage: Spark's higher-order functions are
     INTERPRETED (measured ~16 μs per element — 4.7 s for 1000 300-char
@@ -167,21 +210,37 @@ def hashed_shingles(
     'UDFs are the slow path' inverts when the built-in alternative never
     enters codegen. Explicit repartition: the stage is CPU-bound on tiny
     bytes, so AQE byte-coalescing must not collapse it."""
-    import pandas as pd
+    import pyarrow as pa
+
+    schema = "id long, _sh array<long>"
+    if minhash is not None:
+        num_hashes, bands = minhash
+        if num_hashes % bands:
+            raise ValueError(f"bands ({bands}) must divide num_hashes ({num_hashes})")
+        schema += ", _sig array<long>, _keys array<long>"
+
+    def lists(flat, lens):
+        offsets = np.zeros(len(lens) + 1, dtype=np.int32)
+        np.cumsum(lens, out=offsets[1:])
+        return pa.ListArray.from_arrays(pa.array(offsets), pa.array(flat, pa.int64()))
 
     def gen(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "_sh": [_shingle_hashes_np(t or "", k) for t in pdf[text_col]],
-                }
-            )
+        for batch in batches:
+            texts = batch.column(text_col).to_pylist()
+            shs = [_shingle_hashes_np(t or "", k) for t in texts]
+            lens = np.fromiter(map(len, shs), dtype=np.int64, count=len(shs))
+            flat = np.concatenate(shs) if shs else np.empty(0, dtype=np.int64)
+            cols = [batch.column(id_col).cast(pa.int64()), lists(flat, lens)]
+            if minhash is not None:
+                sig, keys = _minhash_np(flat, lens, num_hashes, bands)
+                cols.append(lists(sig.ravel(), np.full(len(shs), num_hashes)))
+                cols.append(lists(keys.ravel(), np.full(len(shs), bands)))
+            yield pa.RecordBatch.from_arrays(cols, ["id", "_sh", "_sig", "_keys"][: len(cols)])
 
     return (
         docs.repartition(n_part, id_col)
         .select(id_col, text_col)
-        .mapInPandas(gen, "id long, _sh array<long>")
+        .mapInArrow(gen, schema)
     )
 
 
@@ -205,7 +264,7 @@ def minhash_lsh_dedup(
 
     estimate_margin: before the (expensive) exact shingle-intersection
     join, drop candidate pairs whose signature-estimated jaccard
-    (matching-minhash fraction — pure codegen over the k hash columns)
+    (matching-minhash fraction — pure codegen over the signature array)
     falls below threshold - margin. At k=32, P(est < θ-0.2 | true j = θ)
     is ≈ 0.3%, so recall loss is negligible while near-dup-heavy corpora
     (where LSH emits O(n²) candidates because the docs really are all
@@ -218,8 +277,9 @@ def minhash_lsh_dedup(
         AQE's byte-based coalescing would otherwise collapse it to one task
         (the documented trap on this host; same fix as extract.text);
         explicit-count repartitions are exempt from AQE coalescing.
-      * signatures are computed ONCE and reused by both the banded join and
-        the estimate prefilter (one explode+groupBy, the dominant hash cost).
+      * shingles, signatures and band keys come from ONE Arrow pass
+        (hashed_shingles with minhash=...); the persisted result feeds the
+        banded join, the estimate prefilter and the rescore.
       * the exact rescore is a numpy MERGE-intersect over the per-doc
         shingle ARRAYS (sorted+unique by construction) — O(|A|+|B|) per
         candidate pair, Arrow-batched — instead of the exploded shingle
@@ -227,7 +287,7 @@ def minhash_lsh_dedup(
         on near-dup-heavy corpora). Measured 4.1x over the JVM
         array_intersect form, which boxes a hash set per row.
     """
-    from ..functions.lsh import derive_banding, derive_lsh_config, lsh_candidate_pairs_filtered, minhash_signatures
+    from ..functions.lsh import derive_banding, derive_lsh_config, lsh_candidate_pairs_filtered
 
     import pandas as pd  # noqa: F401  (Arrow batches below)
 
@@ -241,24 +301,21 @@ def minhash_lsh_dedup(
         derived, _ = derive_lsh_config(threshold)
         num_hashes = ((max(derived, bands) + bands - 1) // bands) * bands
     n_part = docs.sparkSession.sparkContext.defaultParallelism
-    # shingles are hashed to 64-bit longs up front (hashed_shingles: exact
-    # — injective code + bijective finalizer), so every downstream op
-    # (min-agg signatures, merge-intersect rescore) runs on primitive
-    # longs. The relation is persisted — three consumers (signatures,
-    # rescore a-side, rescore b-side) would otherwise each re-run the
-    # shingler; at 8 B/shingle it is ~2.5 KB/doc, MEMORY_AND_DISK-safe at
-    # any corpus size.
+    # shingles are hashed to 64-bit longs (hashed_shingles: exact —
+    # injective code + bijective finalizer) in the same pass that derives
+    # the signatures and band keys, so the rescore runs on primitive longs.
+    # The relation is persisted — three consumers (banding, rescore a-side,
+    # rescore b-side) would otherwise each re-run the shingler; at 8
+    # B/shingle it is ~2.5 KB/doc, MEMORY_AND_DISK-safe at any corpus size.
     from pyspark import StorageLevel
 
-    with_sh = hashed_shingles(docs, k, n_part).persist(StorageLevel.MEMORY_AND_DISK)
+    with_sh = hashed_shingles(docs, k, n_part, minhash=(num_hashes, bands)).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     if cache_registry is not None:
         cache_registry.append(with_sh)
-    sig = minhash_signatures(with_sh, "id", F.col("_sh"), num_hashes)
     est_min = None if estimate_margin is None else threshold - estimate_margin
-    cands = lsh_candidate_pairs_filtered(
-        sig, "id", num_hashes, bands, est_min=est_min,
-        cache_registry=cache_registry,
-    )
+    cands = lsh_candidate_pairs_filtered(with_sh, "id", num_hashes, est_min=est_min)
     arrs = with_sh.select("id", "_sh", F.size("_sh").alias("_sz"))
     labeled = cands.join(
         arrs.select(F.col("id").alias("a"), F.col("_sh").alias("_sha"), F.col("_sz").alias("sza")), "a"

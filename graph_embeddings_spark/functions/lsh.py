@@ -1,14 +1,15 @@
-"""MinHash + LSH banding, implemented natively on DataFrame ops (JVM-side).
+"""MinHash + LSH banding: the JVM half of candidate generation.
 
 Replaces the reference's O(n²) all-pairs CompareJob fan-out
 (compare/CompareJob.java:11-54, driver loop Rdf2GrphConverter.java:127-186)
 with the blocked approximate join BASELINE.json north_star names
 ("MinHash-LSH canonicalization of entity surface forms").
 
-Everything is expressed with explode / groupBy / min aggregates over
-xxhash64, so the whole signature computation is one shuffle and stays inside
-whole-stage codegen — no Python, no MLlib vector boxing. Determinism: hash
-seeds are literal ints, so signatures are identical at any parallelism.
+The signatures and band keys come from the numpy shingle kernel
+(datapipe.dedup.hashed_shingles with minhash=...), which hashes with
+Spark's xxhash64 bit for bit; this module derives the banding and runs the
+bucket self-join over its rows. Determinism: hash seeds are literal ints,
+so signatures are identical at any parallelism.
 
 Scale guards:
   * ``max_bucket`` drops pathological LSH buckets (a band value shared by
@@ -107,37 +108,6 @@ def derive_lsh_config(
     return best[1], best[2]
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str, shingle_col, num_hashes: int = 16
-) -> DataFrame:
-    """(id, shingles) -> (id, h0..h{n-1}) via min(xxhash64(seed, shingle)).
-
-    One explode + one groupBy; rows with zero shingles get Long.MAX sentinel
-    signatures (they only collide with other empty strings).
-    """
-    exploded = df.select(F.col(id_col).alias("_id"), F.explode_outer(shingle_col).alias("_sh"))
-    aggs = [
-        F.min(F.when(F.col("_sh").isNotNull(), F.xxhash64(F.lit(i), F.col("_sh")))).alias(f"h{i}")
-        for i in range(num_hashes)
-    ]
-    sig = exploded.groupBy("_id").agg(*aggs)
-    sentinel = F.lit(2**63 - 1)
-    fixed = [F.coalesce(F.col(f"h{i}"), sentinel).alias(f"h{i}") for i in range(num_hashes)]
-    return sig.select(F.col("_id").alias(id_col), *fixed)
-
-
-def _minhash_band_structs(num_hashes: int, bands: int) -> list:
-    """(band, bucket=xxhash64(band, its h-columns)) structs — the single
-    definition of how minhash signature columns fold into band buckets."""
-    rows_per_band = num_hashes // bands
-    assert bands * rows_per_band == num_hashes, "bands must divide num_hashes"
-    out = []
-    for b in range(bands):
-        cols = [F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)]
-        out.append(F.struct(F.lit(b).alias("band"), F.xxhash64(F.lit(b), *cols).alias("bucket")))
-    return out
-
-
 def packed_sig_bands(df: DataFrame, sig_col: str, bands: int, width: int, keep: list) -> DataFrame:
     """Packed-long signature -> (*keep, band, bucket) rows, where bucket b
     is bit-slice [b*width, (b+1)*width) of sig_col. ONE explode per row —
@@ -156,75 +126,32 @@ def packed_sig_bands(df: DataFrame, sig_col: str, bands: int, width: int, keep: 
     )
 
 
-def lsh_bands(sig_df: DataFrame, id_col: str, num_hashes: int, bands: int) -> DataFrame:
-    """signatures -> (id, band, bucket) — one row per band."""
-    return sig_df.select(
-        F.col(id_col), F.explode(F.array(*_minhash_band_structs(num_hashes, bands))).alias("bb")
-    ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-
-
-def lsh_candidate_pairs_from_sig(
-    sig_df: DataFrame,
-    id_col: str,
-    num_hashes: int,
-    bands: int,
-    max_bucket: int = 1000,
-) -> DataFrame:
-    """Self-join candidates (a < b) from precomputed signatures — lets a
-    caller compute signatures ONCE and reuse them for both banding and the
-    signature-estimate prefilter (minhash_lsh_dedup does)."""
-    bands_df = lsh_bands(sig_df, id_col, num_hashes, bands)
-    sized = bands_df.withColumn(
-        "bsz", F.count("*").over(Window.partitionBy("band", "bucket"))
-    ).filter(F.col("bsz") <= max_bucket)
-    a = sized.select(F.col(id_col).alias("a"), "band", "bucket")
-    b = sized.select(F.col(id_col).alias("b"), "band", "bucket")
-    return (
-        a.join(b, ["band", "bucket"], "inner")
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
-
-
 def lsh_candidate_pairs_filtered(
-    sig_df: DataFrame,
+    keyed: DataFrame,
     id_col: str,
     num_hashes: int,
-    bands: int,
     max_bucket: int = 1000,
     est_min: float | None = None,
-    cache_registry: list | None = None,
 ) -> DataFrame:
-    """Band join + signature-estimate prefilter FUSED into one stage.
+    """Band join + signature-estimate prefilter FUSED into one stage over
+    the MinHash kernel's rows (id, _sig, _keys): one (band, bucket) row per
+    band key, a self-join on it, pairs a < b.
 
-    The signature rides along the banded rows as a single array<long>
-    column, so the matching-minhash-fraction estimate is computed inside
-    the bucket join itself (zip_with over the two arrays) — before the
-    distinct — instead of re-joining the signature table twice afterwards.
-    est_min: drop pairs whose estimated jaccard (matching fraction) is
-    below it; None keeps every bucket collision."""
-    from pyspark import StorageLevel
-
-    banded = sig_df.select(
-        F.col(id_col),
-        F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("_sig"),
-        F.explode(F.array(*_minhash_band_structs(num_hashes, bands))).alias("bb"),
-    ).select(id_col, "_sig", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    # persisted: the self-join below reads this relation TWICE, and without
-    # a cache each side re-runs the whole upstream signature aggregation
-    # (Catalyst's exchange reuse does not fire once AQE broadcasts one side)
-    sized = (
-        banded.withColumn(
-            "bsz", F.count("*").over(Window.partitionBy("band", "bucket"))
-        )
-        .filter(F.col("bsz") <= max_bucket)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    if cache_registry is not None:
-        cache_registry.append(sized)
-    a = sized.select(F.col(id_col).alias("a"), F.col("_sig").alias("_siga"), "band", "bucket")
-    b2 = sized.select(F.col(id_col).alias("b"), F.col("_sig").alias("_sigb"), "band", "bucket")
+    The signature rides along the banded rows as the _sig array<long>, so
+    the matching-minhash-fraction estimate is computed inside the bucket
+    join itself — before the distinct — instead of re-joining the signature
+    table twice afterwards. est_min: drop pairs whose estimated jaccard
+    (matching fraction) is below it; None keeps every bucket collision and
+    leaves _sig out of the join. Both sides of the self-join read the one
+    bucket-size window's shuffle (Spark reuses the exchange), so the kernel
+    upstream runs once without a cache here."""
+    sig = ["_sig"] if est_min is not None else []
+    banded = keyed.select(id_col, *sig, F.posexplode("_keys").alias("band", "bucket"))
+    sized = banded.withColumn(
+        "bsz", F.count("*").over(Window.partitionBy("band", "bucket"))
+    ).filter(F.col("bsz") <= max_bucket)
+    a = sized.select(F.col(id_col).alias("a"), *[F.col(c).alias(c + "a") for c in sig], "band", "bucket")
+    b2 = sized.select(F.col(id_col).alias("b"), *[F.col(c).alias(c + "b") for c in sig], "band", "bucket")
     joined = a.join(b2, ["band", "bucket"], "inner").filter(F.col("a") < F.col("b"))
     if est_min is not None:
         # matching-minhash count as a FOLD of per-index comparisons — fully
@@ -242,24 +169,6 @@ def lsh_candidate_pairs_filtered(
         )
         joined = joined.filter(matches >= F.lit(int(est_min * num_hashes + 0.999999)))
     return joined.select("a", "b").distinct()
-
-
-def lsh_candidate_pairs(
-    df: DataFrame,
-    id_col: str,
-    shingle_col,
-    num_hashes: int = 16,
-    bands: int = 8,
-    max_bucket: int = 1000,
-) -> DataFrame:
-    """Self-join candidates (a < b) from banded MinHash buckets.
-
-    Buckets larger than ``max_bucket`` are dropped (skew guard).
-    """
-    return lsh_candidate_pairs_from_sig(
-        minhash_signatures(df, id_col, shingle_col, num_hashes),
-        id_col, num_hashes, bands, max_bucket,
-    )
 
 
 def rare_shingle_pairs(

@@ -4,9 +4,10 @@ Spark evaluates ``F.xxhash64(c1, c2, ...)`` by folding XXH64 over the
 columns: ``h = 42; for v in cols: h = hash(v, seed=h)`` where integer types
 go through the 4-byte path, longs through the 8-byte path, and strings hash
 their UTF-8 bytes. Arrow-batched numpy kernels that must reproduce
-JVM-computed hashes exactly (the SimHash bit-vote in datapipe/dedup.py and
-the hyperplane plane matrix in datapipe/ann.py) use these functions; parity
-with the JVM is asserted in tests/test_xxh64.py against F.xxhash64 itself.
+JVM-computed hashes exactly (the SimHash bit-vote and the MinHash
+signatures and band keys in datapipe/dedup.py, the hyperplane plane matrix
+in datapipe/ann.py) use these functions; parity with the JVM is asserted in
+tests/test_xxh64.py and tests/test_minhash.py against F.xxhash64 itself.
 
 The scalar byte-string form is pure Python (used per *distinct* token with
 a cache — token vocabularies are Zipf, so the amortized cost is tiny); the
@@ -75,13 +76,6 @@ def xxh64(data: bytes, seed: int = 42) -> int:
         h = (_rotl(h ^ (data[i] * _P5) & _M, 11) * _P1) & _M
         i += 1
     return _fmix(h)
-
-
-def xxh64_str(s: str, seed: int = 42) -> int:
-    """Signed 64-bit hash of a string's UTF-8 bytes — exactly
-    ``F.xxhash64(lit(s))``."""
-    h = xxh64(s.encode("utf-8"), seed)
-    return h - (1 << 64) if h >= (1 << 63) else h
 
 
 # ---------------------------------------------------------------------------

@@ -34,11 +34,13 @@ _STRING_METRICS = {
 }
 
 
-def _hashed_label_shingles(pool: DataFrame, k: int) -> DataFrame:
-    """(id, label, ...) -> (id, _sh array<long>) via the Arrow-batched
-    numpy shingle kernel (datapipe.dedup.hashed_shingles) — candidate
-    generation never runs the interpreted char_shingles_col HOF at corpus
-    scale. Measured (shingle+32-hash signatures, local[8], 5k rows):
+def _hashed_label_shingles(pool: DataFrame, k: int, minhash: tuple[int, int] | None = None) -> DataFrame:
+    """(id, label, ...) -> (id, _sh array<long>[, _sig, _keys]) via the
+    Arrow-batched numpy shingle kernel (datapipe.dedup.hashed_shingles) —
+    candidate generation never runs the interpreted char_shingles_col HOF at
+    corpus scale; with minhash=(num_hashes, bands) the same pass yields the
+    MinHash signatures and LSH band keys. Measured (shingle+32-hash
+    signatures, local[8], 5k rows):
     ~500-char literals HOF 13.2s vs numpy 1.1s (11.9x); ~30-char labels
     HOF 0.80s vs numpy 1.16s — the short-label deficit is the Python
     stage's FIXED startup/Arrow overhead, which amortizes with row count,
@@ -54,7 +56,7 @@ def _hashed_label_shingles(pool: DataFrame, k: int) -> DataFrame:
     from ..datapipe.dedup import hashed_shingles
 
     n_part = pool.sparkSession.sparkContext.defaultParallelism
-    return hashed_shingles(pool, k, n_part, id_col="id", text_col="label")
+    return hashed_shingles(pool, k, n_part, id_col="id", text_col="label", minhash=minhash)
 
 
 def _exact_rescore(pairs_labeled: DataFrame, group: SimilarityGroup) -> DataFrame:
@@ -145,20 +147,14 @@ def similarity_pairs(nodes: DataFrame, group: SimilarityGroup) -> DataFrame:
                 _hashed_label_shingles(pool, 3), "id", F.col("_sh")
             )
         else:  # ngram_jaccard / ngram_cosine: banded MinHash over char shingles
-            from ..functions.lsh import (
-                derive_lsh_config,
-                lsh_candidate_pairs_from_sig,
-                minhash_signatures,
-            )
+            from ..functions.lsh import derive_lsh_config, lsh_candidate_pairs_filtered
 
             # (num_hashes, bands) derived from the group's threshold
             # (S-curve) so the candidate volume tracks the acceptance bar
             # instead of degenerating to all-pairs at high thresholds
             n_hashes, bands = derive_lsh_config(group.threshold)
-            sig = minhash_signatures(
-                _hashed_label_shingles(pool, group.ngram), "id", F.col("_sh"), n_hashes
-            )
-            cands = lsh_candidate_pairs_from_sig(sig, "id", n_hashes, bands)
+            keyed = _hashed_label_shingles(pool, group.ngram, minhash=(n_hashes, bands))
+            cands = lsh_candidate_pairs_filtered(keyed, "id", n_hashes)
     else:
         cands = _numeric_buckets(pool, group)
 

@@ -19,9 +19,9 @@ Reference semantics preserved exactly:
     weight=similarity and etype=0 (Rdf2GrphConverter.java:158-173).
 
 Scale notes: the node dictionary is a distinct + range sort — explicit,
-deliberate exchanges (SURVEY.md §4.4). The weights dictionary is broadcast;
-the edge-type dictionary is numbered on the driver and inlined as a map
-literal. Edge id resolution is two joins against the node dictionary; at
+deliberate exchanges (SURVEY.md §4.4). The weights dictionary and the
+edge-type dictionary (numbered on the driver) are inlined as map literals.
+Edge id resolution is two joins against the node dictionary; at
 10^12-triple scale those joins shuffle on (label) / (pred,label), the
 natural keys, and AQE handles skewed labels (hub entities).
 """
@@ -36,18 +36,27 @@ from ..config import BLANK, LITERAL, URI
 OBJ_URI, OBJ_BLANK, OBJ_LITERAL = 0, 1, 2
 
 
+def _map_lookup(mapping: dict, key_type: str, value_type: str, key):
+    """mapping[key] as a map literal: a driver-side dictionary inlined in
+    the plan (NULL for a missing key), with no relation to scan or join."""
+    return F.map_from_arrays(
+        F.array(*map(F.lit, mapping)).cast(f"array<{key_type}>"),
+        F.array(*map(F.lit, mapping.values())).cast(f"array<{value_type}>"),
+    )[key]
+
+
 def filter_by_predicate_weights(triples: DataFrame, weights: dict[str, float] | None) -> DataFrame:
     """F1 — keep only weighted predicates, attach the weight column.
 
-    Broadcast join rather than isin() so the weight value rides along and the
-    plan stays a single broadcast hash join at any dictionary size. With no
-    map (None) every predicate is kept at weight 1.0.
+    The weight is a map-literal lookup and a predicate without one is
+    filtered out, so the plan has no join and no driver-side relation (a
+    broadcast of a local list plans as an RDD scan that starts Python
+    workers). With no map (None) every predicate is kept at weight 1.0.
     """
     if weights is None:
         return triples.withColumn("weight", F.lit(1.0).cast("float"))
-    spark = triples.sparkSession
-    wdf = spark.createDataFrame(list(weights.items()), "pred string, weight float")
-    return triples.join(F.broadcast(wdf), "pred", "inner")
+    weight = _map_lookup(weights, "string", "float", F.col("pred"))
+    return triples.withColumn("weight", weight).filter(F.col("weight").isNotNull())
 
 
 def node_kind_expr():
@@ -147,10 +156,7 @@ def build_edges(
     pred_ctx condition expresses both. The etype is a lookup in the
     driver-side A2 dictionary, inlined as a map literal.
     """
-    etype = F.map_from_arrays(
-        F.array(*map(F.lit, etypes)).cast("array<string>"),
-        F.array(*map(F.lit, etypes.values())).cast("array<int>"),
-    )[F.col("pred")]
+    etype = _map_lookup(etypes, "string", "int", F.col("pred"))
     t = triples_weighted.withColumn("obj_type", node_kind_expr()).withColumn(
         "obj_pred_ctx", F.when(F.col("obj_type") == LITERAL, F.col("pred"))
     )

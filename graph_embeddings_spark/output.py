@@ -123,18 +123,20 @@ def config_header_lines(config: PipelineConfig) -> list[str]:
     return lines
 
 
-def _write_lines_with_header(df: DataFrame, header: list[str], path: str) -> None:
+def _lines_with_header(df: DataFrame, header: list[str]) -> DataFrame:
     """Header rows sort before every data row (order key -len(header)..-1 vs
     node_id >= 0); the global orderBy range-partitions, so part files read
-    in order reproduce the reference's byte layout."""
-    spark = df.sparkSession
-    hdr = spark.createDataFrame(
-        [(i - len(header), line) for i, line in enumerate(header)],
-        "node_id long, line string",
+    in order reproduce the reference's byte layout. The header rows are a
+    range over an array literal: a driver-side list would plan as an RDD
+    scan, whose every read (the sort's sample, its shuffle) starts Python
+    workers."""
+    n = len(header)
+    lines = F.array(*map(F.lit, header)).cast("array<string>")
+    hdr = df.sparkSession.range(n).select(
+        (F.col("id") - n).alias("node_id"),
+        F.element_at(lines, (F.col("id") + 1).cast("int")).alias("line"),
     )
-    df.select("node_id", "line").unionByName(hdr).orderBy("node_id").select(
-        "line"
-    ).write.mode("overwrite").text(path)
+    return df.select("node_id", "line").unionByName(hdr).orderBy("node_id").select("line")
 
 
 def write_tsv(
@@ -149,9 +151,7 @@ def write_tsv(
     vector<->key alignment contract). With a config, both files start with
     the reference's '#' settings header (EmbeddingTextWriter.java:41-70)."""
     header = config_header_lines(config) if config is not None else []
-    _write_lines_with_header(
-        vectors_tsv_lines(embeddings), header, f"{out_dir}/{name}.vectors.tsv"
-    )
-    _write_lines_with_header(
-        dict_tsv_lines(embeddings), header, f"{out_dir}/{name}.dict.tsv"
-    )
+    for lines, suffix in ((vectors_tsv_lines, "vectors"), (dict_tsv_lines, "dict")):
+        _lines_with_header(lines(embeddings), header).write.mode("overwrite").text(
+            f"{out_dir}/{name}.{suffix}.tsv"
+        )

@@ -107,6 +107,13 @@ def _resumable(spark, work_dir, stage, build_fn, resume: bool, caches: list | No
 
 @dataclass
 class PipelineResult:
+    """What one pipeline call built. With a work_dir its DataFrames are
+    lazy reads of the stage checkpoints, not copies: a later call that
+    rebuilds the same work_dir (resume=False, or a stage that was not
+    committed) replaces those files, and using an earlier result then fails
+    with a missing-file error. Collect or copy what must outlive the next
+    call, or give that call its own work_dir."""
+
     triples: DataFrame
     nodes: DataFrame
     edges: DataFrame

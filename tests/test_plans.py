@@ -19,16 +19,6 @@ def _optimized(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
-def test_predicate_weight_filter_broadcasts(spark):
-    from graph_embeddings_spark.graph.materialize import filter_by_predicate_weights
-
-    triples = spark.createDataFrame(
-        [("s", "works_at", "o", 0)] * 10, "subj string, pred string, obj string, obj_kind int"
-    )
-    out = filter_by_predicate_weights(triples, {"works_at": 1.0})
-    assert "BroadcastHashJoin" in _plan(out)
-
-
 def test_parquet_pushdown_and_pruning(spark):
     df = (
         spark.read.parquet(f"{SF}/lineitem.parquet")
@@ -53,16 +43,57 @@ def test_textstats_stays_jvm_side(spark):
         assert "*(" in plan or "WholeStageCodegen" in plan
 
 
-def test_minhash_signatures_jvm_side(spark):
-    from graph_embeddings_spark.functions.lsh import char_shingles_col, minhash_signatures
+def test_minhash_band_keys_one_arrow_stage(spark):
+    """J1 ngram MinHash: the labels become band keys in ONE Arrow stage —
+    the band rows are a posexplode of the kernel's output, with no
+    aggregate, exchange or other Python node between them — and the kernel
+    runs once: both sides of the bucket self-join reuse its shuffle."""
+    from graph_embeddings_spark.config import LITERAL, SimilarityGroup
+    from graph_embeddings_spark.graph.canonicalize import similarity_pairs
 
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    sig = minhash_signatures(
-        docs.select(F.col("doc_id"), char_shingles_col(F.col("text")).alias("sh")),
-        "doc_id", F.col("sh"), num_hashes=8,
+    nodes = spark.range(40).select(
+        F.col("id").alias("node_id"),
+        F.concat(F.lit("label "), (F.col("id") % 9).cast("string")).alias("label"),
+        F.lit(LITERAL).cast("tinyint").alias("node_type"),
+        F.lit("p").alias("pred_ctx"),
     )
-    plan = _plan(sig)
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    group = SimilarityGroup("p", "p", method="ngram_jaccard", threshold=0.7, ngram=3)
+    pairs = similarity_pairs(nodes, group)
+    assert pairs.collect()  # runs it, so the plan below is the final one
+    final = _plan(pairs).split("== Initial Plan ==")[0]
+    assert final.count("MapInArrow") == 1 and "ReusedExchange" in final, final
+    lines = final.splitlines()
+    keys = next(i for i, line in enumerate(lines) if "posexplode(_keys" in line)
+    kernel = next(i for i, line in enumerate(lines) if "MapInArrow" in line)
+    between = "\n".join(lines[keys:kernel])
+    assert keys < kernel, final
+    for node in ("Aggregate", "Exchange", "EvalPython", "MapInPandas"):
+        assert node not in between, final
+
+
+def test_header_and_weights_have_no_rdd_scan(spark):
+    """The TSV header rows and the predicate weights are driver-side
+    lists; planned as a local RDD (`Scan ExistingRDD`) every read of them
+    would start Python workers. Both must be JVM-side expressions."""
+    from graph_embeddings_spark.graph.materialize import filter_by_predicate_weights
+    from graph_embeddings_spark.output import _lines_with_header
+
+    lines = spark.range(5).select(F.col("id").alias("node_id"), F.lit("x").alias("line"))
+    header = _lines_with_header(lines, ["# a", "# b", "# c"])
+    assert [r["line"] for r in header.collect()] == ["# a", "# b", "# c"] + ["x"] * 5
+    triples = spark.range(6).select(
+        F.lit("s").alias("subj"),
+        F.when(F.col("id") % 3 == 0, "works_at").when(F.col("id") % 3 == 1, "born_in")
+        .otherwise("knows").alias("pred"),
+        F.lit("o").alias("obj"), F.lit(0).alias("obj_kind"),
+    )
+    weighted = filter_by_predicate_weights(triples, {"works_at": 1.5, "knows": 0.25})
+    assert sorted((r["pred"], r["weight"]) for r in weighted.collect()) == [
+        ("knows", 0.25), ("knows", 0.25), ("works_at", 1.5), ("works_at", 1.5),
+    ]
+    for df in (header, weighted):
+        plan = _plan(df)
+        assert "ExistingRDD" not in plan and "Join" not in plan, plan
 
 
 def test_alias_resolution_broadcasts(spark, world):

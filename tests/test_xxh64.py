@@ -9,11 +9,14 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from graph_embeddings_spark.functions.xxh64 import (
-    xxh64_int_np,
-    xxh64_long_np,
-    xxh64_str,
-)
+from graph_embeddings_spark.functions.xxh64 import xxh64, xxh64_int_np, xxh64_long_np
+
+
+def xxh64_str(s: str, seed: int = 42) -> int:
+    """Signed 64-bit hash of a string's UTF-8 bytes — exactly
+    ``F.xxhash64(lit(s))``."""
+    h = xxh64(s.encode("utf-8"), seed)
+    return h - (1 << 64) if h >= (1 << 63) else h
 
 
 def test_xxh64_string_matches_spark(spark):

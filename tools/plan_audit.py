@@ -68,16 +68,21 @@ def main():
         "2 projected columns of 11.",
     )
 
-    # 2. F1 broadcast
+    # 2. F1 map-literal lookup
     from graph_embeddings_spark.graph.materialize import filter_by_predicate_weights
 
-    triples = spark.createDataFrame(
-        [("s", "works_at", "o", 0)], "subj string, pred string, obj string, obj_kind int"
+    triples = spark.range(1000).select(
+        F.col("id").cast("string").alias("subj"),
+        F.concat(F.lit("p"), (F.col("id") % 4).cast("string")).alias("pred"),
+        F.lit("o").alias("obj"),
+        F.lit(0).alias("obj_kind"),
     )
     add(
         "F1 predicate-weight filter",
-        filter_by_predicate_weights(triples, {"works_at": 1.0}),
-        "Dictionary side broadcast — no shuffle of the triple stream.",
+        filter_by_predicate_weights(triples, {"p0": 1.0, "p1": 0.5}),
+        "The weight is a map-literal lookup and unweighted predicates are "
+        "filtered on it being NULL: one codegen stage, no join, no shuffle "
+        "of the triple stream and no driver-side relation to scan.",
     )
 
     # 2b. graph stage: A1 ids, then the edges against the checkpointed nodes
@@ -140,19 +145,19 @@ def main():
         "coalescing would otherwise collapse the CPU-bound scan to 1-2 tasks).",
     )
 
-    # 5. minhash signatures JVM-side
-    from graph_embeddings_spark.functions.lsh import char_shingles_col, minhash_signatures
+    # 5. MinHash signatures + band keys in the Arrow shingle kernel
+    from graph_embeddings_spark.datapipe.dedup import hashed_shingles
+    from graph_embeddings_spark.functions.lsh import lsh_candidate_pairs_filtered
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    sig = minhash_signatures(
-        docs.select("doc_id", char_shingles_col(F.col("text")).alias("sh")),
-        "doc_id", F.col("sh"), num_hashes=16,
-    )
     add(
-        "MinHash signatures",
-        sig,
-        "explode + min-aggregate over xxhash64: one shuffle, zero Python — "
-        "signature computation never leaves codegen.",
+        "MinHash signatures and LSH band keys",
+        lsh_candidate_pairs_filtered(hashed_shingles(docs, 3, 8, minhash=(32, 8)), "id", 32),
+        "One MapInArrow from text to shingles, signatures and band keys "
+        "(numpy xxhash64, bit-identical to the JVM expressions); the band "
+        "rows are a posexplode of its output — no explode/min-aggregate "
+        "shuffle — and both sides of the bucket self-join read the one "
+        "bucket-size window's shuffle.",
     )
 
     # 6. GloVe epoch — both optimize() transports over one presharded cooc
