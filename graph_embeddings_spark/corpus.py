@@ -374,7 +374,6 @@ def _is_dup_page(world: World, page_id: int) -> bool:
 # ---------------------------------------------------------------------------
 
 WEB_PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
-EXPECTED_TRIPLES_SCHEMA = "url string, subj string, pred string, obj string, kind string"
 
 
 def web_pages_df(spark, world: World, n_pages: int, partitions: int | None = None):
@@ -399,21 +398,6 @@ def web_pages_df(spark, world: World, n_pages: int, partitions: int | None = Non
             yield out
 
     return spark.range(0, n_pages, numPartitions=partitions).mapInPandas(gen, WEB_PAGES_SCHEMA)
-
-
-def expected_triples_df(spark, world: World, n_pages: int, partitions: int | None = None):
-    import pandas as pd
-
-    partitions = partitions or max(8, n_pages // 20_000)
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for pid in pdf["id"]:
-                rows.extend(expected_triples_for_page(world, int(pid)))
-            yield pd.DataFrame(rows, columns=["url", "subj", "pred", "obj", "kind"])
-
-    return spark.range(0, n_pages, numPartitions=partitions).mapInPandas(gen, EXPECTED_TRIPLES_SCHEMA)
 
 
 def alias_dict_df(spark, world: World):

@@ -4,7 +4,7 @@ The sandbox ships no image libraries, but BMP is simple enough to implement
 from the public format description, which makes the image path of
 datapipe/multimodal.py a REAL decode instead of a declared stub: 8-bit
 paletted (grayscale) and 24-bit BGR, uncompressed, bottom-up rows padded to
-4 bytes. Encoders exist so tests and the synthetic media corpus can produce
+4 bytes. The grayscale encoder lets the synthetic media corpus produce
 genuine files; `decode_bmp` returns a (h, w) uint8 grayscale grid (24-bit
 input is reduced with integer Rec.601 luma — deterministic, no floats).
 
@@ -40,16 +40,6 @@ def encode_bmp_gray8(img: np.ndarray) -> bytes:
     pal = np.zeros((256, 4), dtype=np.uint8)
     pal[:, 0] = pal[:, 1] = pal[:, 2] = np.arange(256)
     return _headers(w, h, 8, 256, h * stride) + pal.tobytes() + rows.tobytes()
-
-
-def encode_bmp_rgb24(img: np.ndarray) -> bytes:
-    """(h, w, 3) uint8 RGB -> 24-bpp BMP (stored BGR, bottom-up, padded)."""
-    img = np.asarray(img, dtype=np.uint8)
-    h, w, _ = img.shape
-    stride = (3 * w + 3) & ~3
-    rows = np.zeros((h, stride), dtype=np.uint8)
-    rows[:, : 3 * w] = img[::-1, :, ::-1].reshape(h, 3 * w)  # flip rows, RGB->BGR
-    return _headers(w, h, 24, 0, h * stride) + rows.tobytes()
 
 
 def is_bmp(payload: bytes) -> bool:

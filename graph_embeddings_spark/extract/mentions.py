@@ -1,4 +1,5 @@
-"""Mention detection + entity-link scoring over a broadcast alias dictionary.
+"""Alias matching + entity-link resolution over a broadcast alias
+dictionary, the two halves extract/triples.py builds on.
 
 New graft surface (the reference consumes already-linked RDF). Per
 BASELINE.json north_star: "batched mention detection and entity-link scoring
@@ -17,9 +18,7 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import ArrayType, StringType
 
 
 def _trie_body(node: dict) -> str:
@@ -66,32 +65,4 @@ def resolve_alias_table(alias_df: DataFrame) -> DataFrame:
         alias_df.groupBy("alias")
         .agg(F.min(F.struct((-F.col("prior")).alias("np"), F.col("entity_id"))).alias("w"))
         .select("alias", F.col("w.entity_id").alias("entity_id"), (-F.col("w.np")).alias("prior"))
-    )
-
-
-def detect_mentions(pages_df: DataFrame, aliases: list[str], text_col: str = "text") -> DataFrame:
-    """pages -> (url, surface) one row per alias occurrence (Arrow-batched)."""
-    pattern = alias_regex(aliases)
-
-    @F.pandas_udf(ArrayType(StringType()))
-    def find_aliases(text: pd.Series) -> pd.Series:
-        return text.map(lambda t: [m.group(0) for m in pattern.finditer(t)] if t else [])
-
-    return (
-        pages_df.withColumn("surface", F.explode(find_aliases(F.col(text_col))))
-        .select("url", "surface")
-    )
-
-
-def link_mentions(mentions_df: DataFrame, alias_df: DataFrame) -> DataFrame:
-    """(url, surface) ⋈ broadcast resolved-alias table -> linked mentions.
-
-    Inner join drops unlinkable surfaces (cannot happen for dictionary-driven
-    detection, but keeps the operator total for free-text callers).
-    """
-    resolved = resolve_alias_table(alias_df)
-    return (
-        mentions_df.withColumn("alias", F.lower(F.col("surface")))
-        .join(F.broadcast(resolved), "alias", "inner")
-        .select("url", "surface", "entity_id", "prior")
     )

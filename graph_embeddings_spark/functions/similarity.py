@@ -403,8 +403,11 @@ def similarity_col(
         method, ngram=ngram, smooth=smooth, distance=distance, pattern=pattern, time=time
     )
 
+    # marked non-deterministic only so the optimizer keeps a filter on the
+    # score above its projection: pushed below, the filter re-plans the
+    # Python scorer, and every pair is scored twice
     @F.pandas_udf(DoubleType())
     def score(x: pd.Series, y: pd.Series) -> pd.Series:
         return pd.Series([metric(p, q) for p, q in zip(x, y)], dtype="float64")
 
-    return score(a, b)
+    return score.asNondeterministic()(a, b)

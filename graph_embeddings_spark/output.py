@@ -15,7 +15,7 @@ JVM-side, one pass, no Python."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from .config import BLANK, LITERAL, PREDICATE, URI, OutputConfig, PipelineConfig
 
@@ -50,18 +50,12 @@ def filter_embeddings(embeddings: DataFrame, out: OutputConfig) -> DataFrame:
     return embeddings.filter(keep) if keep is not None else embeddings.limit(0)
 
 
-def vectors_tsv_lines(embeddings: DataFrame) -> DataFrame:
-    """One string column 'line': vector floats %11.6E-joined by tabs
-    (EmbeddingTextWriter.java:133-136)."""
-    return embeddings.select(
-        F.array_join(
-            F.transform(F.col("vec"), lambda v: F.format_string("%11.6E", v)), "\t"
-        ).alias("line"),
-        F.col("node_id"),
-    )
+def vector_line() -> Column:
+    """Vector floats %11.6E-joined by tabs (EmbeddingTextWriter.java:133-136)."""
+    return F.array_join(F.transform(F.col("vec"), lambda v: F.format_string("%11.6E", v)), "\t")
 
 
-def dict_tsv_lines(embeddings: DataFrame) -> DataFrame:
+def dict_line() -> Column:
     """'key<TAB>typename' with tabs/newlines stripped from keys
     (EmbeddingTextWriter.java:94,137-145)."""
     clean = F.regexp_replace(F.col("label"), r"[\t\n\r]", " ")
@@ -71,9 +65,7 @@ def dict_tsv_lines(embeddings: DataFrame) -> DataFrame:
         ),
         F.col("node_type").cast("int"),
     )
-    return embeddings.select(
-        F.format_string("%s\t%s", clean, tname).alias("line"), F.col("node_id")
-    )
+    return F.format_string("%s\t%s", clean, tname)
 
 
 def config_header_lines(config: PipelineConfig) -> list[str]:
@@ -123,20 +115,21 @@ def config_header_lines(config: PipelineConfig) -> list[str]:
     return lines
 
 
-def _lines_with_header(df: DataFrame, header: list[str]) -> DataFrame:
-    """Header rows sort before every data row (order key -len(header)..-1 vs
-    node_id >= 0); the global orderBy range-partitions, so part files read
-    in order reproduce the reference's byte layout. The header rows are a
-    range over an array literal: a driver-side list would plan as an RDD
-    scan, whose every read (the sort's sample, its shuffle) starts Python
-    workers."""
+def _sorted_with_header(rows: DataFrame, header: list[str]) -> DataFrame:
+    """rows(node_id, *line columns) plus the header rows, in one global
+    order. Header rows sort before every data row (order key -len(header)..-1
+    vs node_id >= 0) and carry their line in every line column; the orderBy
+    range-partitions, so part files read in order reproduce the reference's
+    byte layout. The header rows are a range over an array literal: a
+    driver-side list would plan as an RDD scan, whose every read (the sort's
+    sample, its shuffle) starts Python workers."""
     n = len(header)
     lines = F.array(*map(F.lit, header)).cast("array<string>")
-    hdr = df.sparkSession.range(n).select(
-        (F.col("id") - n).alias("node_id"),
-        F.element_at(lines, (F.col("id") + 1).cast("int")).alias("line"),
+    line = F.element_at(lines, (F.col("id") + 1).cast("int"))
+    hdr = rows.sparkSession.range(n).select(
+        (F.col("id") - n).alias("node_id"), *[line.alias(c) for c in rows.columns if c != "node_id"]
     )
-    return df.select("node_id", "line").unionByName(hdr).orderBy("node_id").select("line")
+    return rows.unionByName(hdr).orderBy("node_id")
 
 
 def write_tsv(
@@ -149,9 +142,15 @@ def write_tsv(
     aligned by a deterministic node_id order (the reference iterates the
     co-occurrence index order; any stable shared order preserves the
     vector<->key alignment contract). With a config, both files start with
-    the reference's '#' settings header (EmbeddingTextWriter.java:41-70)."""
+    the reference's '#' settings header (EmbeddingTextWriter.java:41-70).
+    Both files are written from one sort: a lazy local checkpoint keeps the
+    sorted partitions the first write computes, and the second write reads
+    them: 4 jobs, where a persist ran 5 (the cache fills in a job of its
+    own) and a sort per file 6. A lost executor fails the export instead of
+    recomputing it, and the export is redone on resume until both files
+    commit."""
     header = config_header_lines(config) if config is not None else []
-    for lines, suffix in ((vectors_tsv_lines, "vectors"), (dict_tsv_lines, "dict")):
-        _lines_with_header(lines(embeddings), header).write.mode("overwrite").text(
-            f"{out_dir}/{name}.{suffix}.tsv"
-        )
+    rows = embeddings.select("node_id", vector_line().alias("vectors"), dict_line().alias("dict"))
+    ordered = _sorted_with_header(rows, header).localCheckpoint(eager=False)
+    for suffix in ("vectors", "dict"):
+        ordered.select(suffix).write.mode("overwrite").text(f"{out_dir}/{name}.{suffix}.tsv")

@@ -315,7 +315,7 @@ def run_graph_pipeline(
                 os.path.exists(os.path.join(export_dir, f"{config.output.name}.{kind}.tsv", "_SUCCESS"))
                 for kind in ("vectors", "dict")
             )
-            # two global sorts: only re-export when something trained or the
+            # a global sort: only re-export when something trained or the
             # prior export never committed both files
             if trained_now or not resume or not exported:
                 filtered = filter_embeddings(embeddings, config.output)

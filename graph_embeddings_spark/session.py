@@ -3,6 +3,21 @@
 All knobs that matter at cluster scale (AQE, adaptive skew join, shuffle
 partitions, Arrow batching) are set here so the same code path runs on a
 real cluster via spark-submit --py-files with only master/memory changed.
+
+JIT policy: the driver JVM runs C1 only (-XX:TieredStopAtLevel=1: no
+profiling tier, no C2). The CLI and perfbench start one local JVM, make
+one ~20 s call and exit, and C2 never pays back its compile cost in such a
+process. Per-thread CPU from /proc/<jvm>/task/*/stat during one
+rdf_kg call (4 vCPUs, seeds 1-3): the C2 compiler threads burned 23.5-29.7
+CPU-s, all Spark task threads together 11.6-14.7. With C1 only there is no
+C2 thread, C1 stays at ~4.5 CPU-s and the task threads did not rise
+(11.2-13.0). C1 code is slower per row, so the margin narrows as input
+grows: at 10x rdf_kg (48.6k triples) task-thread CPU rose 34-38 -> 47-54
+CPU-s while JVM CPU fell 88-95 -> 62-75, and the call took as long. Java
+17 floating point is strict at every tier, so results are bit-identical.
+The flag is a launch option: it applies only when PySpark starts the JVM
+itself, as get_spark does. Under spark-submit the JVM already exists, and
+cluster executors keep their own JIT settings.
 """
 
 from __future__ import annotations
@@ -54,7 +69,6 @@ def get_spark(
     app_name: str = "graph-embeddings-spark",
     cores: int | str | None = None,
     shuffle_partitions: int | None = None,
-    extra_conf: dict | None = None,
 ) -> SparkSession:
     # Keep glibc from serving numpy's large temp buffers via mmap/munmap:
     # every munmap broadcasts TLB-shootdown IPIs to ALL vCPUs, which
@@ -85,6 +99,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.extraJavaOptions", "-XX:TieredStopAtLevel=1")  # JIT policy above
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.executorEnv.MALLOC_MMAP_THRESHOLD_", str(1 << 30))
@@ -96,8 +111,6 @@ def get_spark(
     local_dir = _local_dir()
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

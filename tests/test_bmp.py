@@ -5,12 +5,18 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from graph_embeddings_spark.datapipe.bmp import (
-    decode_bmp,
-    encode_bmp_gray8,
-    encode_bmp_rgb24,
-    is_bmp,
-)
+from graph_embeddings_spark.datapipe.bmp import _headers, decode_bmp, encode_bmp_gray8, is_bmp
+from media_helpers import resize_images
+
+
+def encode_bmp_rgb24(img: np.ndarray) -> bytes:
+    """(h, w, 3) uint8 RGB -> 24-bpp BMP (stored BGR, bottom-up, padded)."""
+    img = np.asarray(img, dtype=np.uint8)
+    h, w, _ = img.shape
+    stride = (3 * w + 3) & ~3
+    rows = np.zeros((h, stride), dtype=np.uint8)
+    rows[:, : 3 * w] = img[::-1, :, ::-1].reshape(h, 3 * w)  # flip rows, RGB->BGR
+    return _headers(w, h, 24, 0, h * stride) + rows.tobytes()
 
 
 @pytest.mark.parametrize("w,h", [(8, 8), (5, 3), (1, 1), (7, 4), (13, 2)])
@@ -66,9 +72,7 @@ def test_unknown_image_payload_gives_null_features(spark):
     pixels made up from the payload bytes."""
     from pyspark.sql import functions as F
 
-    from graph_embeddings_spark.datapipe.multimodal import (
-        MEDIA_SCHEMA, image_features, resize_images,
-    )
+    from graph_embeddings_spark.datapipe.multimodal import MEDIA_SCHEMA, image_features
 
     meta = {"width": 8, "height": 8, "sample_rate": 0, "n_frames": 1}
     bmp = encode_bmp_gray8(np.zeros((8, 8), dtype=np.uint8))

@@ -4,11 +4,11 @@ from __future__ import annotations
 
 from graph_embeddings_spark.corpus import (
     build_world,
-    expected_triples_df,
     page_plan,
     render_page,
     web_pages_df,
 )
+from triple_gate import expected_triples_df
 
 
 def test_world_deterministic():

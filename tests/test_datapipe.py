@@ -17,7 +17,6 @@ from graph_embeddings_spark.datapipe.dedup import (
 )
 from graph_embeddings_spark.datapipe.multimodal import (
     image_features,
-    resize_images,
     sample_frames,
     synthetic_media_df,
 )
@@ -26,6 +25,7 @@ from graph_embeddings_spark.datapipe.textstats import (
     lang_scores,
     quality_features,
 )
+from media_helpers import resize_images
 
 
 @pytest.fixture(scope="module")

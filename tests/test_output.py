@@ -3,7 +3,7 @@
 from __future__ import annotations
 
 from graph_embeddings_spark.config import BLANK, LITERAL, URI, OutputConfig
-from graph_embeddings_spark.output import dict_tsv_lines, filter_embeddings, vectors_tsv_lines
+from graph_embeddings_spark.output import dict_line, filter_embeddings, vector_line
 
 
 def _emb(spark):
@@ -34,13 +34,13 @@ def test_prefix_filter_any_match(spark):
 def test_vectors_tsv_format(spark):
     """%11.6E floats, tab-joined (EmbeddingTextWriter.java:133-136)."""
     df = _emb(spark).filter("node_id = 0")
-    line = vectors_tsv_lines(df).collect()[0]["line"]
+    line = df.select(vector_line()).first()[0]
     assert line == "5.000000E-01\t-2.500000E-01"
 
 
 def test_dict_tsv_format(spark):
     df = _emb(spark).filter("node_id = 3")
-    line = dict_tsv_lines(df).collect()[0]["line"]
+    line = df.select(dict_line()).first()[0]
     assert line == "some literal\tLITERAL"
 
 
@@ -49,7 +49,7 @@ def test_dict_tsv_strips_tabs(spark):
         [(9, "bad\tkey\nhere", URI, [0.0])],
         "node_id long, label string, node_type tinyint, vec array<float>",
     )
-    line = dict_tsv_lines(df).collect()[0]["line"]
+    line = df.select(dict_line()).first()[0]
     assert "\n" not in line and line.count("\t") == 1
 
 

@@ -8,18 +8,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from graph_embeddings_spark.config import LITERAL, OptConfig, OutputConfig, PipelineConfig
-from graph_embeddings_spark.corpus import (
-    alias_dict_df,
-    expected_triples_df,
-    web_pages_df,
-)
+from graph_embeddings_spark.corpus import alias_dict_df, web_pages_df
 from graph_embeddings_spark.metrics import (
     cosine_neighbor_rank,
     link_prediction_auc,
     mean_reciprocal_rank,
 )
 from graph_embeddings_spark.pipeline import run_pipeline
-from triple_gate import precision_recall
+from triple_gate import expected_triples_df, precision_recall
 
 N_PAGES = 300
 

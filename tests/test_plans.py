@@ -43,22 +43,28 @@ def test_textstats_stays_jvm_side(spark):
         assert "*(" in plan or "WholeStageCodegen" in plan
 
 
-def test_minhash_band_keys_one_arrow_stage(spark):
-    """J1 ngram MinHash: the labels become band keys in ONE Arrow stage —
-    the band rows are a posexplode of the kernel's output, with no
-    aggregate, exchange or other Python node between them — and the kernel
-    runs once: both sides of the bucket self-join reuse its shuffle."""
-    from graph_embeddings_spark.config import LITERAL, SimilarityGroup
-    from graph_embeddings_spark.graph.canonicalize import similarity_pairs
+def _literal_nodes(spark):
+    """40 literal nodes of one predicate over 9 distinct labels."""
+    from graph_embeddings_spark.config import LITERAL
 
-    nodes = spark.range(40).select(
+    return spark.range(40).select(
         F.col("id").alias("node_id"),
         F.concat(F.lit("label "), (F.col("id") % 9).cast("string")).alias("label"),
         F.lit(LITERAL).cast("tinyint").alias("node_type"),
         F.lit("p").alias("pred_ctx"),
     )
+
+
+def test_minhash_band_keys_one_arrow_stage(spark):
+    """J1 ngram MinHash: the labels become band keys in ONE Arrow stage —
+    the band rows are a posexplode of the kernel's output, with no
+    aggregate, exchange or other Python node between them — and the kernel
+    runs once: both sides of the bucket self-join reuse its shuffle."""
+    from graph_embeddings_spark.config import SimilarityGroup
+    from graph_embeddings_spark.graph.canonicalize import similarity_pairs
+
     group = SimilarityGroup("p", "p", method="ngram_jaccard", threshold=0.7, ngram=3)
-    pairs = similarity_pairs(nodes, group)
+    pairs = similarity_pairs(_literal_nodes(spark), group)
     assert pairs.collect()  # runs it, so the plan below is the final one
     final = _plan(pairs).split("== Initial Plan ==")[0]
     assert final.count("MapInArrow") == 1 and "ReusedExchange" in final, final
@@ -71,15 +77,30 @@ def test_minhash_band_keys_one_arrow_stage(spark):
         assert node not in between, final
 
 
+def test_j1_scorer_runs_once_per_pair(spark):
+    """The `sim >= threshold` filter must not be pushed below the projection
+    that defines `sim`: that would plan the Arrow scorer twice, once for
+    the filter and once for the output column."""
+    from graph_embeddings_spark.config import SimilarityGroup
+    from graph_embeddings_spark.graph.canonicalize import similarity_pairs
+
+    group = SimilarityGroup("p", "p", method="ngram_jaccard", threshold=0.7, ngram=3)
+    pairs = similarity_pairs(_literal_nodes(spark), group)
+    got = pairs.collect()
+    assert got and all(r["sim"] >= 0.7 for r in got)
+    final = _plan(pairs).split("== Initial Plan ==")[0]
+    assert final.count("ArrowEvalPython") == 1, final
+
+
 def test_header_and_weights_have_no_rdd_scan(spark):
     """The TSV header rows and the predicate weights are driver-side
     lists; planned as a local RDD (`Scan ExistingRDD`) every read of them
     would start Python workers. Both must be JVM-side expressions."""
     from graph_embeddings_spark.graph.materialize import filter_by_predicate_weights
-    from graph_embeddings_spark.output import _lines_with_header
+    from graph_embeddings_spark.output import _sorted_with_header
 
     lines = spark.range(5).select(F.col("id").alias("node_id"), F.lit("x").alias("line"))
-    header = _lines_with_header(lines, ["# a", "# b", "# c"])
+    header = _sorted_with_header(lines, ["# a", "# b", "# c"])
     assert [r["line"] for r in header.collect()] == ["# a", "# b", "# c"] + ["x"] * 5
     triples = spark.range(6).select(
         F.lit("s").alias("subj"),
@@ -98,7 +119,7 @@ def test_header_and_weights_have_no_rdd_scan(spark):
 
 def test_alias_resolution_broadcasts(spark, world):
     from graph_embeddings_spark.corpus import alias_dict_df
-    from graph_embeddings_spark.extract.mentions import link_mentions
+    from triple_gate import link_mentions
 
     mentions = spark.createDataFrame([("u", "alice")], "url string, surface string")
     out = link_mentions(mentions, alias_dict_df(spark, world))

@@ -1,4 +1,5 @@
-"""SparkSession factory: the host-aware local[N] core clamp."""
+"""SparkSession factory: the host-aware local[N] core clamp and the
+driver JVM's JIT policy."""
 
 from __future__ import annotations
 
@@ -22,3 +23,11 @@ def test_core_clamp_env_override_wins(monkeypatch):
     monkeypatch.setattr(os, "cpu_count", lambda: 2)
     assert effective_cores(32) == 16
     assert effective_cores(4) == 4
+
+
+def test_driver_jvm_runs_c1_only(spark):
+    """The JVM get_spark launched runs without C2: the flag must reach the
+    process's own arguments, not only the session conf."""
+    jvm = spark.sparkContext._jvm
+    args = list(jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments())
+    assert "-XX:TieredStopAtLevel=1" in args, args

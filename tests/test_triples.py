@@ -4,23 +4,20 @@ from __future__ import annotations
 
 import pytest
 
-from graph_embeddings_spark.corpus import (
-    alias_dict_df,
-    expected_triples_df,
-    web_pages_df,
-)
-from graph_embeddings_spark.extract.mentions import (
-    detect_mentions,
-    link_mentions,
-    resolve_alias_table,
-)
+from graph_embeddings_spark.corpus import alias_dict_df, web_pages_df
+from graph_embeddings_spark.extract.mentions import alias_regex, resolve_alias_table
 from graph_embeddings_spark.extract.text import latest_pages
 from graph_embeddings_spark.extract.triples import (
     _block_triples,
     extract_surface_triples,
 )
-from graph_embeddings_spark.extract.mentions import alias_regex
-from triple_gate import precision_recall, triples_from_pages
+from triple_gate import (
+    detect_mentions,
+    expected_triples_df,
+    link_mentions,
+    precision_recall,
+    triples_from_pages,
+)
 
 
 def test_block_triples_unit():
